@@ -16,6 +16,12 @@ reading-ordered spans array whose (kind, text, media_ref, order)
 sequence is the per-row correctness invariant.
 """
 
+from docling_api_spark import _zipguard
+
+# PySpark workers re-parse every zip on sys.path at each task start on
+# Python < 3.12 (worker_util.py:144; gh-103200); skip unchanged ones
+_zipguard.install()
+
 __version__ = "0.1.0"
 
 EMBEDDING_DIM = 384  # parity: reference sqlite-vec float[384] (core/vector_store.py:17)

@@ -18,7 +18,10 @@ Parquet + _commits manifest"). The contract:
   presence proves its buckets' data is complete.
 * Each commit records lineage + metrics ``{buckets, docs, spans,
   chars}`` — the per-partition metrics stream the north_rule wants in
-  Iceberg commit metadata, queryable via ``commit_history``.
+  Iceberg commit metadata, queryable via ``commit_history``. The
+  metrics come from the write itself: an ``Observation`` on the frame
+  being written folds them as the rows stream into the files, so a
+  batch is one Spark action — no persist, no second pass.
 * Resume = anti-join pending buckets against the union of committed
   bucket ids (the reference's pending-work scan, one metadata read).
 
@@ -33,7 +36,7 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from docling_api_spark.operators.extract import extract
@@ -195,10 +198,14 @@ def bucket_of(col, num_buckets: int):
     return F.pmod(F.xxhash64(col), F.lit(num_buckets)).cast("int")
 
 
-def batch_metrics(extracted: DataFrame) -> dict:
-    """Lineage metrics for one committed batch: docs / spans / chars."""
-    m = extracted.agg(
-        F.count("*").alias("docs"),
+def observe_batch_metrics(extracted: DataFrame) -> tuple[DataFrame, Observation]:
+    """``extracted`` with the lineage metrics docs / spans / chars
+    attached as an ``Observation``; the first action on the returned
+    frame fills it."""
+    obs = Observation("batch_metrics")
+    observed = extracted.observe(
+        obs,
+        F.count(F.lit(1)).alias("docs"),
         F.sum(F.size("spans")).alias("spans"),
         F.sum(
             F.aggregate(
@@ -213,7 +220,15 @@ def batch_metrics(extracted: DataFrame) -> dict:
                 lambda a, x: a + x,
             )
         ).alias("chars"),
-    ).first()
+    )
+    return observed, obs
+
+
+def batch_metrics(observation: Observation) -> dict:
+    """Lineage metrics for one committed batch, read from the
+    observation its write filled. Sums over zero rows are NULL; an
+    empty batch commits zeros."""
+    m = observation.get
     return {
         "docs": int(m["docs"] or 0),
         "spans": int(m["spans"] or 0),
@@ -232,6 +247,17 @@ def extract_with_checkpoint(
 ) -> dict:
     """Run the extraction pipeline bucket-batch by bucket-batch with
     commit metadata; resumable after any crash.
+
+    Each batch is a single action, the write. Its manifest metrics are
+    observed on the frame being written (``observe_batch_metrics``):
+    the ``CollectMetrics`` node sits directly under the write, with no
+    exchange between them, so it runs in the write's result stage.
+    Spark merges a result-stage task's accumulator updates only for the
+    first successful attempt of each partition, so under task retry or
+    speculation every row is counted exactly once. Nothing is
+    persisted: the write is the only pass over the batch. The
+    observation is read only after the write returned; an empty batch
+    commits zeros.
 
     Returns {"processed_batches", "skipped_buckets", "total_buckets"}.
     ``fail_after_batches`` injects a crash for resume tests.
@@ -260,15 +286,13 @@ def extract_with_checkpoint(
             extract_kwargs = {} if max_size_bytes is None else {"max_size_bytes": max_size_bytes}
             if ocr is not None:
                 extract_kwargs["ocr"] = ocr
-            extracted = extract(batch, **extract_kwargs).withColumn(
-                "bucket", bucket_of(F.col("doc_id"), num_buckets)
+            extracted, observation = observe_batch_metrics(
+                extract(batch, **extract_kwargs).withColumn(
+                    "bucket", bucket_of(F.col("doc_id"), num_buckets)
+                )
             )
-            extracted.persist()
-            try:
-                extracted.write.mode("overwrite").partitionBy("bucket").parquet(table_path)
-                metrics = batch_metrics(extracted)
-            finally:
-                extracted.unpersist()
+            extracted.write.mode("overwrite").partitionBy("bucket").parquet(table_path)
+            metrics = batch_metrics(observation)
             log.commit(seq, group, metrics, num_buckets=num_buckets)
             seq += 1
             processed += 1

@@ -82,16 +82,17 @@ def stratified_keep(
 
     Output: input columns + ``n_stratum`` + ``kept``.
     """
+    key = "__stratum"  # join key of the counts side; must not shadow an input column
+    while key in df.columns:
+        key = "_" + key
     counts = df.groupBy(stratum_col).agg(
         F.count("*").alias("n_stratum")
-    ).withColumnRenamed(stratum_col, "__stratum")
+    ).withColumnRenamed(stratum_col, key)
     n_min = counts.agg(F.min("n_stratum").alias("n_min"))
     h = md5_long(F.concat(F.col(id_col).cast("string"), F.lit(f"#{salt}"))) % scale
     return (
-        df.join(
-            F.broadcast(counts), F.col(stratum_col).eqNullSafe(F.col("__stratum"))
-        )
-        .drop("__stratum")
+        df.join(F.broadcast(counts), F.col(stratum_col).eqNullSafe(counts[key]))
+        .drop(key)
         .crossJoin(F.broadcast(n_min))
         .withColumn("kept", h * F.col("n_stratum") < F.lit(scale) * F.col("n_min"))
     )

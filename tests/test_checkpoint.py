@@ -166,11 +166,12 @@ def test_resume_with_different_num_buckets_refuses(spark, corpus, tmp_path):
     assert res["skipped_buckets"] == [0, 1]
 
 
-def test_chars_metric_survives_null_text_span(spark):
+def test_chars_metric_survives_null_text_span(spark, tmp_path):
     """A NULL span text (OUT_SPAN.text is nullable) must not null the
     whole doc's char fold — F.sum would then silently drop the doc
-    from the lineage chars metric while docs/spans still count it."""
-    from docling_api_spark.checkpoint import batch_metrics
+    from the lineage chars metric while docs/spans still count it.
+    Read, as in the job, from the observation a write filled."""
+    from docling_api_spark.checkpoint import batch_metrics, observe_batch_metrics
 
     extracted = spark.createDataFrame(
         [
@@ -180,4 +181,71 @@ def test_chars_metric_survives_null_text_span(spark):
         "doc_id string, spans array<struct<"
         "kind string, text string, media_ref string, `order` int>>",
     )
-    assert batch_metrics(extracted) == {"docs": 2, "spans": 3, "chars": 11}
+    observed, observation = observe_batch_metrics(extracted)
+    observed.write.parquet(str(tmp_path / "t"))
+    assert batch_metrics(observation) == {"docs": 2, "spans": 3, "chars": 11}
+
+
+@pytest.mark.parametrize("case", ["size_gated", "empty_corpus"])
+def test_batch_without_rows_commits_zero_metrics(corpus, tmp_path, case):
+    """Every doc size-gated, or no docs at all: each batch writes no
+    rows, and its observation still completes (no hang) with zeros."""
+    out = str(tmp_path / "t")
+    if case == "size_gated":
+        res = extract_with_checkpoint(corpus, out, num_buckets=2, batch_buckets=1, max_size_bytes=1)
+    else:
+        res = extract_with_checkpoint(corpus.limit(0), out, num_buckets=2, batch_buckets=1)
+    assert res["processed_batches"] == 2
+    zero = {"docs": 0, "spans": 0, "chars": 0}
+    assert [c["metrics"] for c in CommitLog(out).commits()] == [zero, zero]
+
+
+def _ancestors(plan: str, node: str) -> list[str] | None:
+    """Names of the nodes above the first ``node`` in the first tree of
+    an explain-formatted plan, root first; None if ``node`` is absent."""
+    stack: list[tuple[int, str]] = []
+    for line in plan.splitlines():
+        if not line.strip():
+            if stack:
+                break  # end of the first tree; node details follow
+            continue
+        name = line.lstrip(" :+-*")
+        depth = len(line) - len(name)
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        if name.startswith(node):
+            return [n for _, n in stack]
+        stack.append((depth, name))
+    return None
+
+
+def test_batch_metrics_observed_in_write_result_stage(spark, corpus, tmp_path):
+    """The batch is one action: its write. The metrics' CollectMetrics
+    node must sit under the write with no exchange in between — in the
+    write's result stage, where Spark merges each partition's
+    accumulator updates once, however often its task is retried — and
+    no batch job reads a cached relation."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        xs = store.executionsList()
+        return [xs.apply(i) for i in range(xs.size())]
+
+    before = max((x.executionId() for x in executions()), default=-1)
+    extract_with_checkpoint(corpus, str(tmp_path / "t"), num_buckets=1, batch_buckets=1)
+    plans = [x.physicalPlanDescription() for x in executions() if x.executionId() > before]
+    writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(writes) == 1
+    assert not any("InMemoryTableScan" in p for p in plans)
+    # the adaptive plan holds the final tree, then the initial one
+    trees = writes[0].split("== Initial Plan ==")
+    assert len(trees) == 2
+    for tree in trees:
+        above = _ancestors(tree.split("== Final Plan ==")[-1], "CollectMetrics")
+        assert above is not None
+        write = [i for i, n in enumerate(above) if n.startswith("Execute InsertIntoHadoopFsRelationCommand")]
+        assert write, above
+        between = above[write[0] + 1 :]
+        assert not [n for n in between if "Exchange" in n or "Shuffle" in n], above

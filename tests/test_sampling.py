@@ -288,13 +288,30 @@ def test_group_split_no_leakage(spark):
 def test_stratified_keep_conserves_null_stratum_rows(spark):
     """A NULL stratum must form its own stratum, not vanish through the
     count join (the silent row-loss class: an equi-join on a NULL key
-    matches nothing). Row conservation + NULL stratum counted."""
-    rows = [(i, "en" if i % 2 else None) for i in range(20)]
+    matches nothing). Skewed strata (15 NULL / 5 "en") so the NULL
+    stratum is the one that must be downsampled: row conservation,
+    NULL stratum counted, and some of its rows really dropped."""
+    rows = [(i, None if i < 15 else "en") for i in range(20)]
     d = spark.createDataFrame(rows, "doc_id int, lang string")
     out = stratified_keep(d, stratum_col="lang").collect()
     assert len(out) == 20  # one output row per input row
     null_rows = [r for r in out if r["lang"] is None]
-    assert len(null_rows) == 10
-    assert all(r["n_stratum"] == 10 for r in null_rows)
-    # keep decisions for NULL-stratum rows are real booleans
+    assert len(null_rows) == 15
+    assert all(r["n_stratum"] == 15 for r in null_rows)
+    # keep decisions for NULL-stratum rows are real booleans, and the
+    # larger stratum is downsampled toward the smaller one
     assert all(r["kept"] in (True, False) for r in null_rows)
+    assert 0 < sum(r["kept"] for r in null_rows) < 15
+    assert all(r["kept"] for r in out if r["lang"] == "en")
+
+
+def test_stratified_keep_input_with_temp_column_name(spark):
+    """An input column that happens to be named like the operator's
+    internal join key must pass through untouched, not collide."""
+    rows = [(i, "en" if i % 4 else "de", f"v{i}") for i in range(20)]
+    d = spark.createDataFrame(rows, "doc_id int, lang string, __stratum string")
+    out = stratified_keep(d, stratum_col="lang").orderBy("doc_id").collect()
+    assert [r["__stratum"] for r in out] == [f"v{i}" for i in range(20)]
+    assert out[0].asDict().keys() == {"doc_id", "lang", "__stratum", "n_stratum", "n_min", "kept"}
+    base = stratified_keep(d.drop("__stratum"), stratum_col="lang").orderBy("doc_id").collect()
+    assert [(r["n_stratum"], r["kept"]) for r in out] == [(r["n_stratum"], r["kept"]) for r in base]
