@@ -258,7 +258,7 @@ def run_suite(sf_dir: str, cpus: str) -> dict:
 
     spark = get_spark(master=f"local[{cpus}]", app_name=f"bench-{cpus}")
     qmap = registry.queries()
-    _warm(spark, sf_dir)
+    warmed = _warm(spark, sf_dir)
 
     # per-suite-half host-health probes: a degraded window opening
     # mid-run is marked, not mistaken for a code regression
@@ -334,6 +334,9 @@ def run_suite(sf_dir: str, cpus: str) -> dict:
         "membw_calibration_gbps": round(membw / 1e9, 2),
         "membw_probes_gbps": membw_probes,
         "degraded_memory_window": degraded,
+        # False when no sibling sf0.001 exists: the first timed
+        # mapInPandas query then pays the workers' cold imports
+        "warmed": warmed,
         **extras,
         "detail_file": "BENCH_DETAIL.json",
     }
@@ -349,10 +352,11 @@ def run_suite(sf_dir: str, cpus: str) -> dict:
     return compact
 
 
-def _warm(spark, sf_dir: str | None = None) -> None:
+def _warm(spark, sf_dir: str | None = None) -> bool:
     """Warm JVM codegen AND the Python worker pool (mapInPandas spawns
     one worker per core on first use — excluded from steady-state
-    throughput, which is what a long-running job sees)."""
+    throughput, which is what a long-running job sees). Returns whether
+    the sf0.001 extract→chunk→embed warm chain ran."""
     from pyspark.sql import functions as F
 
     @F.pandas_udf("long")
@@ -371,15 +375,19 @@ def _warm(spark, sf_dir: str | None = None) -> None:
     # ingest_end_to_end at fixed code. Run the flagship
     # extract→chunk→embed chain at the smallest SF so each reused
     # worker has the real modules resident before timing starts.
-    if sf_dir is not None:
-        small = os.path.join(os.path.dirname(sf_dir.rstrip("/")) or ".", "sf0.001")
-        if os.path.isdir(small):
-            from docling_api_spark.plans import registry
+    if sf_dir is None:
+        return False
+    small = os.path.join(os.path.dirname(sf_dir.rstrip("/")) or ".", "sf0.001")
+    if not os.path.isdir(small):
+        return False
+    from docling_api_spark.plans import registry
 
-            fn = registry.queries().get("ingest_end_to_end")
-            if fn is not None:
-                fn(spark, small).write.format("noop").mode("overwrite").save()
-                spark.catalog.clearCache()
+    fn = registry.queries().get("ingest_end_to_end")
+    if fn is None:
+        return False
+    fn(spark, small).write.format("noop").mode("overwrite").save()
+    spark.catalog.clearCache()
+    return True
 
 
 def _cpu_calibration(width: int, seconds: float = 2.0) -> float:

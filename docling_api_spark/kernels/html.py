@@ -236,6 +236,16 @@ def extract_html(markup: str, media_prefix: str = "") -> list[dict]:
         table_rows = []
         table_caption = None
 
+    def break_words() -> None:
+        """A line break or dropped subtree separates words: a space
+        wherever the next text will accumulate."""
+        if table_depth > 0:
+            (cell_parts if in_cell else foster_parts).append(" ")
+        elif block_stack:
+            block_stack[-1].parts.append(" ")
+        else:
+            pending.append(" ")
+
     pos = 0
     for m in _TAG_RE.finditer(markup):
         raw_text = markup[pos : m.start()]
@@ -278,6 +288,9 @@ def extract_html(markup: str, media_prefix: str = "") -> list[dict]:
                 if not is_void and not self_close:
                     prune_depth = 1
                     prune_stack = [tag]
+                # the dropped subtree still separates the text around
+                # it: "0<nav>1</nav>0" must not read as the word "00"
+                break_words()
                 continue
             if tag == "img":
                 src = attrs.get("src", "")
@@ -323,14 +336,7 @@ def extract_html(markup: str, media_prefix: str = "") -> list[dict]:
                 anchor_depth += 1
                 continue
             if tag == "br":
-                # line break separates words; contributes a space
-                if table_depth > 0:
-                    if in_cell:
-                        cell_parts.append(" ")
-                elif block_stack:
-                    block_stack[-1].parts.append(" ")
-                else:
-                    pending.append(" ")
+                break_words()
                 continue
             kind = _BLOCK_KIND.get(tag)
             if kind is not None:

@@ -17,18 +17,14 @@ per-key skew beyond the key's own row count — the scalable shape at
 10^12 events (a naive ``l.ts >= r.ts`` range join explodes to the
 pairwise product inside each key).
 
-**Connected components** (``connected_components``): min-label
-propagation over an undirected edge list — the clustering step a
-production dedup cascade runs AFTER pair generation (pairs → clusters
-→ keep one representative per cluster). Each iteration is one
-join + one min-aggregation and labels travel one hop, so ``max_iter``
-must be ≥ the component diameter (dedup clusters are shallow — near-dup
-graphs are cliques-of-copies, diameter 1-2). At 10^12 nodes each
-iteration is a pair of key-partitioned shuffles; on deep topologies
-use ``connected_components_star`` below — the alternating
-large-star/small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SOCC 2014), which converges in
-O(log^2 n) rounds regardless of component diameter.
+**Connected components** (``connected_components_star``): the
+clustering step a production dedup cascade runs AFTER pair generation
+(pairs → clusters → keep one representative per cluster), as
+alternating large-star/small-star rounds (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SOCC 2014). It converges in
+O(log^2 n) rounds regardless of component diameter, where one-hop
+min-label propagation needs diameter-many rounds; each round is a pair
+of key-partitioned shuffles over the edge set only.
 """
 
 from __future__ import annotations
@@ -109,94 +105,6 @@ def asof_join(
     return out
 
 
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_iter: int = 5,
-) -> DataFrame:
-    """``nodes(id)`` + undirected ``edges(src, dst)`` →
-    ``(id, label)`` with label = MIN node id of the connected
-    component. Labels travel ONE hop per round, so components are
-    fully labeled only when ``max_iter`` ≥ the component diameter
-    (pinned by tests/test_asof_cc.py); dedup graphs are shallow
-    cliques — see the module docstring for the O(log n) alternative
-    if deep chains ever appear."""
-    # Symmetrize in ONE pass over the edges subtree: a union of the
-    # edge set with its flipped self evaluates the (often expensive —
-    # the MinHash verify pipeline) edges plan once PER BRANCH when the
-    # cache materializes; exploding both orientations out of a single
-    # scan halves that first-round cost (measured 2x on
-    # dedup_best_representative at sf0.1).
-    sym = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src"), F.col("dst")),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    # Iterate over edge ENDPOINTS only: a node with no edge can never
-    # receive a foreign label, so carrying the corpus-wide node set
-    # through every propagation round (VERDICT r3 #5: a shuffle per
-    # round over ALL docs — 26.5 s at 6k docs) only re-derives
-    # label = id. The propagation graph is the verified-pairs graph —
-    # cluster-bounded, orders of magnitude smaller than the corpus at
-    # real dup rates — and isolated nodes join back once at the end.
-    sym = sym.persist()
-    lab = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("label"))
-    )
-    prev_sum = None
-    for _ in range(max_iter):
-        prop = (
-            sym.join(lab, sym.src == lab.id)
-            .select(F.col("dst").alias("id"), "label")
-            .unionByName(lab)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-        )
-        # Lineage truncation, not just caching: each round references
-        # `lab` TWICE (join + union), so composing rounds as plain
-        # lineage doubles the LOGICAL plan per round — Catalyst
-        # re-analysis OOMs the driver near round ~25 on deep graphs
-        # (found by tests/test_cc_star.py's equivalence sweep; persist
-        # caches data but does NOT shrink the plan tree). Non-eager
-        # localCheckpoint keeps ONE action per round: the label-sum agg
-        # below both materializes the checkpoint (truncating the plan
-        # the next join analyzes) and decides the early exit.
-        # Failure-semantics tradeoff: localCheckpoint blocks are
-        # executor-local with NO lineage, so on a real multi-executor
-        # cluster losing an executor mid-query fails the query instead
-        # of recomputing (GraphFrames' CC makes the same tradeoff);
-        # use reliable checkpoint() + a checkpoint dir if executor
-        # churn is expected.
-        nxt = prop.localCheckpoint(eager=False)
-        # min-label propagation is monotone — every node's label can
-        # only decrease — so the exact (decimal-128, no bigint overflow
-        # at 10^12 ids) label sum is strictly decreasing until the
-        # fixpoint; an unchanged sum IS stability, with no per-round
-        # old⋈new comparison join. A stable fixpoint makes every later
-        # round a no-op, so exiting is label-identical
-        # (one-hop-per-round semantics unchanged, pinned by
-        # test_connected_components_*). Superseded round blocks are
-        # freed by the ContextCleaner when their Python refs drop.
-        cur_sum = nxt.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
-        lab = nxt
-        if cur_sum is None or (prev_sum is not None and cur_sum == prev_sum):
-            break  # empty endpoint set, or fixpoint reached
-        prev_sum = cur_sum
-    sym.unpersist()
-    # isolated nodes keep their own id; ONE corpus-wide join total
-    # (AQE broadcasts the label side when it is small enough)
-    return nodes.join(lab, "id", "left").select(
-        "id", F.coalesce("label", "id").alias("label")
-    )
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round (Kiveris et al. 2014): every node's
     strictly-LARGER neighbors re-point at the minimum of its closed
@@ -251,13 +159,11 @@ def connected_components_star(
     stats: dict | None = None,
 ) -> DataFrame:
     """``nodes(id)`` + undirected ``edges(src, dst)`` → ``(id, label)``
-    with label = MIN node id of the connected component — identical
-    contract to :func:`connected_components`, different round bound:
-    alternating large-star/small-star (Kiveris et al., SOCC 2014)
-    converges in O(log^2 n) rounds on ANY topology, where one-hop
-    min-label propagation needs diameter-many rounds. Use this variant
-    when the pair graph can contain long chains (e.g. near-dup edges
-    from sliding/shingled similarity, where A~B~C chains without A~C).
+    with label = MIN node id of the connected component. Alternating
+    large-star/small-star (Kiveris et al., SOCC 2014) converges in
+    O(log^2 n) rounds on ANY topology, including long chains (e.g.
+    near-dup edges from sliding/shingled similarity, where A~B~C
+    chains without A~C).
 
     Scale shape: every round touches only the current edge set —
     candidate-pairs-bounded, never corpus-wide — with two
@@ -277,15 +183,15 @@ def connected_components_star(
     consecutive outputs (count + one-sided exceptAll on checkpointed
     frames); a stable small-star output is a fixed point of both
     stars, so early exit is label-identical. Isolated nodes join back
-    once at the end (same single corpus-wide join as
-    ``connected_components``, pinned by tests/test_cc_star.py)."""
+    once at the end (a single corpus-wide join, pinned by
+    tests/test_cc_star.py)."""
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     # Round 1 reads `e` up to four times (each star references its
     # input twice: aggregate + self-equijoin), and `e` is typically
     # the OUTPUT of an expensive pair pipeline (MinHash verify, hash
     # self-join) — without this cache that upstream evaluates once per
-    # reference (same class as the propagation variant's sym.persist).
-    # Rounds ≥2 read checkpointed frames, so only round 1 needs it.
+    # reference. Rounds ≥2 read checkpointed frames, so only round 1
+    # needs it.
     e = e.persist()
     first_input = e
     prev: DataFrame | None = None
@@ -317,8 +223,8 @@ def connected_components_star(
     # stale label while also being some other node's label, and an
     # unconditional roots-union would emit that id twice with
     # conflicting labels. With the anti-join, cutoff degrades to
-    # stale-but-unique labels — one row per id, same contract as the
-    # propagation variant (pinned by tests/test_cc_star.py).
+    # stale-but-unique labels — one row per id (pinned by
+    # tests/test_cc_star.py).
     lab = (
         e.groupBy("src")
         .agg(F.min("dst").alias("label"))

@@ -17,6 +17,10 @@ cosine):
   key: the probe is a partition-pruned scan instead of a full sweep.
   Everything (planes included) is reproducible from constants, so the
   whole approximate pipeline is still exactly oracle-checkable.
+
+Every top-k path (brute force, SRP-LSH, both IVF quantizers) differs
+only in how it picks candidates; all end in the same exact-rescoring
+tail, ``_rescore_topk``.
 """
 
 from __future__ import annotations
@@ -120,10 +124,19 @@ def knn_topk(
     Deterministic total order: (sim desc, id asc) on the *rounded*
     similarity so cross-engine comparisons sort identically.
     """
-    joined = corpus.crossJoin(F.broadcast(query))
-    scored = joined.select(
-        F.col(id_col),
-        cosine(F.col(vec_col), F.col("qv"), scale).alias("sim"),
+    return _rescore_topk(corpus.crossJoin(F.broadcast(query)), k, vec_col, id_col, scale)
+
+
+def _rescore_topk(
+    cands: DataFrame, k: int, vec_col: str, id_col: str, scale: int
+) -> DataFrame:
+    """The tail every top-k path shares: exact cosine of each candidate
+    against the ``qv`` column it already carries, then the first ``k``
+    in (sim desc, id asc) order on the rounded similarity — one
+    TakeOrderedAndProject. Adds no join: each caller attaches the query
+    the way its candidate step needs (cross join, bucket join)."""
+    scored = cands.select(
+        F.col(id_col), cosine(F.col(vec_col), F.col("qv"), scale).alias("sim")
     )
     return scored.orderBy(F.desc("sim"), id_col).limit(k)
 
@@ -154,11 +167,7 @@ def ann_topk(
     cands = bucketed.join(
         F.broadcast(qb), bucketed["bucket"] == qb["qbucket"], "inner"
     )
-    scored = cands.select(
-        F.col(id_col),
-        cosine(F.col(vec_col), F.col("qv"), scale).alias("sim"),
-    )
-    return scored.orderBy(F.desc("sim"), id_col).limit(k)
+    return _rescore_topk(cands, k, vec_col, id_col, scale)
 
 
 def ivf_index(
@@ -257,11 +266,8 @@ def ivf_probe(
         .limit(nprobe)
         .select("cell")
     )
-    cands = indexed.join(F.broadcast(probe_cells), "cell")
-    scored = cands.crossJoin(F.broadcast(query)).select(
-        F.col(id_col), cosine(F.col(vec_col), F.col("qv"), scale).alias("sim")
-    )
-    return scored.orderBy(F.desc("sim"), id_col).limit(k)
+    cands = indexed.join(F.broadcast(probe_cells), "cell").crossJoin(F.broadcast(query))
+    return _rescore_topk(cands, k, vec_col, id_col, scale)
 
 
 def ivf_fixed_topk(
@@ -307,11 +313,8 @@ def ivf_fixed_topk(
         .limit(nprobe)
         .select("cell")
     )
-    cands = indexed.join(F.broadcast(probes), "cell")
-    scored = cands.crossJoin(F.broadcast(query)).select(
-        F.col(id_col), cosine(F.col(vec_col), F.col("qv"), scale).alias("sim")
-    )
-    return scored.orderBy(F.desc("sim"), id_col).limit(k)
+    cands = indexed.join(F.broadcast(probes), "cell").crossJoin(F.broadcast(query))
+    return _rescore_topk(cands, k, vec_col, id_col, scale)
 
 
 def topk_per_group(scored: DataFrame, group_col: str, order_cols: list, k: int) -> DataFrame:

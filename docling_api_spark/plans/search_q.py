@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from docling_api_spark.functions.hashing import cosine
+from docling_api_spark.operators.search import knn_topk
 from docling_api_spark.plans import _sql as S
 from docling_api_spark.plans.registry import query
 from docling_api_spark.sources.catalog import load
@@ -46,12 +46,7 @@ def search_pipeline(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     d = load(spark, sf_dir, "documents")
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    scored = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select("vec_id", cosine(F.col("embedding"), F.col("qv"), 6).alias("sim"))
-    )
-    topk = scored.orderBy(F.desc("sim"), "vec_id").limit(5)
+    topk = knn_topk(e.filter(F.col("vec_id") != 0), qv, k=5)
     joined = topk.join(F.broadcast(d), topk.vec_id == d.doc_id)
     return joined.select(
         "vec_id",

@@ -292,12 +292,11 @@ def semdedup_survivors(spark, sf_dir):
     "mutual_nn_pairs", prio=20,
     # Mutual nearest neighbors (reciprocal top-1 cosine) — the
     # alignment/bitext-mining primitive: keep (a,b) only when each is
-    # the other's best match. Exact brute-force leg capped at 200
+    # the other's best match. Exact brute force, capped at 200
     # vectors (the doc_embedding_dup_pairs precedent: the quadratic
-    # DuckDB cosine oracle is the cost ceiling, not Spark); the scale
-    # path composes the same reciprocal-rank-1 filter over SRP-LSH
-    # bucketed candidates. Tie-break (sim DESC, neighbor ASC) applied
-    # AFTER the 6-dp round so both engines rank identically.
+    # DuckDB cosine oracle is the cost ceiling, not Spark). Tie-break
+    # (sim DESC, neighbor ASC) applied AFTER the 6-dp round so both
+    # engines rank identically.
     oracle=f"""
         WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200),
         p AS (

@@ -7,7 +7,7 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from docling_api_spark.operators.asof import asof_join, connected_components
+from docling_api_spark.operators.asof import asof_join, connected_components_star
 
 
 def _ts(s):
@@ -61,36 +61,9 @@ def test_asof_tolerance_drops_stale_matches(spark):
 
 
 def test_connected_components_chain(spark):
-    """A 4-node chain (diameter 3) labels fully within max_iter=3
-    rounds of one-hop min propagation."""
+    """A 4-node chain, a pair and an isolated node: every node labelled
+    with its component's minimum id, the isolated one with its own."""
     edges = spark.createDataFrame([(10, 20), (20, 30), (30, 40), (50, 60)], "src long, dst long")
     nodes = spark.createDataFrame([(i,) for i in (10, 20, 30, 40, 50, 60, 70)], "id long")
-    lab = {r["id"]: r["label"] for r in connected_components(edges, nodes, max_iter=3).collect()}
+    lab = {r["id"]: r["label"] for r in connected_components_star(edges, nodes).collect()}
     assert lab == {10: 10, 20: 10, 30: 10, 40: 10, 50: 50, 60: 50, 70: 70}
-
-
-def test_connected_components_insufficient_iters_documented(spark):
-    """One round moves labels one hop — the max_iter >= diameter
-    contract, pinned so nobody 'optimizes' the loop away."""
-    edges = spark.createDataFrame([(10, 20), (20, 30), (30, 40)], "src long, dst long")
-    nodes = spark.createDataFrame([(i,) for i in (10, 20, 30, 40)], "id long")
-    lab = {r["id"]: r["label"] for r in connected_components(edges, nodes, max_iter=1).collect()}
-    assert lab[20] == 10 and lab[30] == 20  # only one hop travelled
-
-
-def test_connected_components_early_exit_at_fixpoint(spark):
-    """max_iter is an upper bound, not a round count: once a round
-    changes no label the loop must exit (VERDICT r3 #5 — every round
-    costs shuffles; cliques converge in one). max_iter=60 on a
-    4-clique must return instantly-identical labels, not run 60
-    rounds re-deriving the edge pipeline."""
-    edges = spark.createDataFrame(
-        [(a, b) for a in (1, 2, 3, 4) for b in (1, 2, 3, 4) if a < b],
-        "src long, dst long",
-    )
-    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 4, 9)], "id long")
-    lab = {
-        r["id"]: r["label"]
-        for r in connected_components(edges, nodes, max_iter=60).collect()
-    }
-    assert lab == {1: 1, 2: 1, 3: 1, 4: 1, 9: 9}

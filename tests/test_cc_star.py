@@ -1,16 +1,30 @@
 """Alternating large-star/small-star connected components (Kiveris et
-al., SOCC 2014): label-equivalence with the one-hop propagation
-variant, plus the deep-chain case that motivates it — O(log^2 n)
-rounds vs diameter-many."""
+al., SOCC 2014): label-equivalence with a pure-Python union-find, plus
+the deep-chain case that motivates it — O(log^2 n) rounds, where
+one-hop min-label propagation needs diameter-many."""
 
 from __future__ import annotations
 
 import random
 
-from docling_api_spark.operators.asof import (
-    connected_components,
-    connected_components_star,
-)
+from docling_api_spark.operators.asof import connected_components_star
+
+
+def _union_find_labels(pairs, ids):
+    """Reference labels: every node → the minimum id in its component."""
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        # the smaller root wins, so every root is its set's minimum
+        parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in ids}
 
 
 def _labels(df):
@@ -43,14 +57,9 @@ def test_star_deep_chain_converges_in_log_rounds(spark):
     n = _nodes(spark, ids)
     lab = _labels(connected_components_star(e, n, max_iter=8))
     assert lab == {i: 1 for i in ids}
-    # the same budget is insufficient for one-hop propagation
-    # (documents WHY the star variant exists; propagation semantics
-    # are one-hop-per-round by contract, see test_asof_cc.py)
-    partial = _labels(connected_components(e, n, max_iter=8))
-    assert partial != lab
 
 
-def test_star_matches_propagation_on_random_graphs(spark):
+def test_star_matches_union_find_on_random_graphs(spark):
     rng = random.Random(42)
     ids = list(range(100))
     pairs = [
@@ -62,9 +71,7 @@ def test_star_matches_propagation_on_random_graphs(spark):
     ]
     e = _edges(spark, pairs)
     n = _nodes(spark, ids)
-    star = _labels(connected_components_star(e, n))
-    prop = _labels(connected_components(e, n, max_iter=100))
-    assert star == prop
+    assert _labels(connected_components_star(e, n)) == _union_find_labels(pairs, ids)
 
 
 def test_star_empty_edges(spark):

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import re
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from docling_api_spark.kernels.html import _unescape, extract_html
 
@@ -69,6 +69,10 @@ tag_soup = st.lists(_piece(), max_size=40).map("".join)
 
 @settings(max_examples=150, deadline=None)
 @given(tag_soup)
+# text on both sides of a dropped subtree must not fuse into one word
+@example("0<nav>1</nav>0")
+@example("<p>ab<script>x</script>cd</p>")
+@example("<table>q<nav>z</nav>r</table>")
 def test_tag_soup_safety(markup):
     spans = extract_html(markup)
     # deterministic

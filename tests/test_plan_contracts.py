@@ -4,6 +4,8 @@ reintroduce a shuffle, lose a broadcast, or un-prune a scan."""
 
 from __future__ import annotations
 
+import re
+
 import __spark_entry__ as E
 
 SF = "/root/testdata/sf0.001"
@@ -282,3 +284,19 @@ def test_ccnet_buckets_no_per_lang_sort(spark):
     plan = _plan(spark, "ccnet_perplexity_buckets")
     assert "Window" not in plan, plan
     assert "BroadcastHashJoin" in plan
+
+
+def test_topk_paths_share_one_rescoring_tail(spark):
+    """Every top-k retrieval path ends in the same exact-rescoring tail
+    (operators/search.py ``_rescore_topk``): one TakeOrderedAndProject
+    on (sim desc, id asc), with the query attached by broadcast — no
+    candidate step shuffles both join sides or goes cartesian."""
+    for name in (
+        "knn_cosine_topk", "ann_lsh_topk", "ivf_fixed_topk", "ivf_ann_topk", "search_pipeline",
+    ):
+        plan = _plan(spark, name)
+        assert re.search(
+            r"TakeOrderedAndProject\(limit=\d+, orderBy=\[sim#\d+ DESC NULLS LAST,vec_id#\d+L? ASC",
+            plan,
+        ), (name, plan)
+        assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan, (name, plan)

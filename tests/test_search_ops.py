@@ -5,15 +5,23 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from docling_api_spark.operators.search import ann_topk, ivf_topk, knn_topk
+from docling_api_spark.operators.search import (
+    ann_topk,
+    ivf_centers_df,
+    ivf_fixed_topk,
+    ivf_index,
+    ivf_probe,
+    ivf_topk,
+    knn_topk,
+)
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
-def _query(spark):
+def _query(spark, vec_id=0):
     return (
         spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        .filter(F.col("vec_id") == 0)
+        .filter(F.col("vec_id") == vec_id)
         .select(F.col("embedding").alias("qv"))
     )
 
@@ -28,6 +36,27 @@ def test_ivf_recall_vs_bruteforce(spark):
     approx = {r.vec_id for r in ivf_topk(corpus, q, k=10, n_cells=8, nprobe=4).collect()}
     # probing half the cells must recover most of the true top-10
     assert len(exact & approx) >= 6
+
+    # KMeans IVF is kept because it is the recall path: at the
+    # ivf_ann_topk / ivf_fixed_topk setting (16 cells, nprobe 4) its
+    # mean recall@10 must be at least the oracle-pinned fixed
+    # quantizer's. ivf_topk is ivf_index + ivf_probe, so the index is
+    # fitted once and probed per query (checked equal on query 0).
+    n_cells, nprobe = 16, 4
+    model, indexed = ivf_index(corpus, n_cells=n_cells)
+    cents = ivf_centers_df(spark, model)
+    assert [tuple(r) for r in ivf_probe(indexed, cents, q, k=10, nprobe=nprobe).collect()] == [
+        tuple(r) for r in ivf_topk(corpus, q, k=10, n_cells=n_cells, nprobe=nprobe).collect()
+    ]
+    kmeans, fixed = [], []
+    for vec_id in range(0, 400, 50):
+        qi = _query(spark, vec_id)
+        truth = {r.vec_id for r in knn_topk(corpus, qi, k=10).collect()}
+        got = ivf_probe(indexed, cents, qi, k=10, nprobe=nprobe).collect()
+        kmeans.append(len(truth & {r.vec_id for r in got}) / 10)
+        got = ivf_fixed_topk(corpus, qi, dim=64, k=10, n_cells=n_cells, nprobe=nprobe).collect()
+        fixed.append(len(truth & {r.vec_id for r in got}) / 10)
+    assert sum(kmeans) >= sum(fixed), (kmeans, fixed)
 
 
 def test_ivf_exact_when_probing_all_cells(spark):
@@ -51,8 +80,6 @@ def test_ivf_cell_partitioned_index_prunes_scan(spark, tmp_path):
     nprobe/n_cells of the data — the cell filter must land in the
     scan's PartitionFilters (directory pruning), not as a post-scan
     row filter over everything."""
-    from docling_api_spark.operators.search import ivf_centers_df, ivf_index, ivf_probe
-
     model, indexed = ivf_index(_corpus(spark), n_cells=8)
     path = str(tmp_path / "ivf_index")
     indexed.write.partitionBy("cell").parquet(path)
