@@ -24,10 +24,15 @@ Parquet + _commits manifest"). The contract:
   batch is one Spark action — no persist, no second pass.
 * Resume = anti-join pending buckets against the union of committed
   bucket ids (the reference's pending-work scan, one metadata read).
+* Up to ``_IN_FLIGHT`` batches run at once, each on its own thread,
+  but manifests are published strictly in seq order, so a batch's
+  fixed cost (planning, stage scheduling, the AQE gaps between its
+  jobs) overlaps the previous batches' work instead of leaving cores
+  idle.
 
 At 1000 executors the unit of recovery is the bucket batch, so a
-killed 100 TB job loses at most one batch of work; bucket count is
-sized so one batch ≈ one AQE-coalesced write stage.
+killed 100 TB job loses at most the in-flight batches of work; bucket
+count is sized so one batch ≈ one AQE-coalesced write stage.
 """
 
 from __future__ import annotations
@@ -35,6 +40,8 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +49,9 @@ from pyspark.sql import functions as F
 from docling_api_spark.operators.extract import extract
 
 COMMITS_DIR = "_commits"
+# bucket batches running at once: one being planned or committed on the
+# driver, one in its map stages, one in its write stage
+_IN_FLIGHT = 3
 
 
 class CommitLog:
@@ -259,8 +269,28 @@ def extract_with_checkpoint(
     observation is read only after the write returned; an empty batch
     commits zeros.
 
+    Up to ``_IN_FLIGHT`` batches run at once on a private thread pool.
+    Seq numbers follow pending-bucket order. The calling thread waits on
+    the oldest batch, publishes its manifest, and only then submits the
+    next batch, so manifests appear in seq order and each one's metrics
+    come from its own batch's observation. Each batch thread runs with
+    the caller's Spark local properties (job group, scheduler pool) as
+    they were when the batch was submitted, and names its jobs
+    ``extract batch seq=<n> buckets=<b,...>``. Spark's FIFO scheduler
+    runs an earlier job's stages first, so where one batch fills every
+    slot the batches run as serially as before and only their driver
+    work overlaps.
+
+    If a batch's write or commit raises, no new batch is submitted: the
+    batches already in flight finish and commit in seq order, then the
+    first exception is re-raised. An in-process failure therefore never
+    leaves bucket data without a manifest; a hard kill loses at most the
+    in-flight batches, which resume rewrites (dynamic partition
+    overwrite).
+
     Returns {"processed_batches", "skipped_buckets", "total_buckets"}.
-    ``fail_after_batches`` injects a crash for resume tests.
+    ``fail_after_batches`` injects a crash for resume tests: that many
+    batches are submitted and committed, then the call raises.
     """
     spark = corpus.sparkSession
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -276,30 +306,65 @@ def extract_with_checkpoint(
         )
     done = log.completed_buckets()
     pending = [b for b in range(num_buckets) if b not in done]
+    groups = [pending[i : i + batch_buckets] for i in range(0, len(pending), batch_buckets)]
+    if fail_after_batches is not None:
+        del groups[fail_after_batches:]
+    extract_kwargs = {} if max_size_bytes is None else {"max_size_bytes": max_size_bytes}
+    if ocr is not None:
+        extract_kwargs["ocr"] = ocr
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def write_batch(props, seq: int, group: list[int]) -> Observation:
+        """Extract and write one bucket batch on a pool thread; returns
+        the observation its write filled. ``extract`` is looked up at
+        call time, so a wrapper installed on this module sees every
+        batch."""
+        jsc.setLocalProperties(props)
+        jsc.setJobDescription(f"extract batch seq={seq} buckets={','.join(map(str, group))}")
+        batch = corpus.filter(bucket_of(F.col("doc_id"), num_buckets).isin(group))
+        extracted, observation = observe_batch_metrics(
+            extract(batch, **extract_kwargs).withColumn(
+                "bucket", bucket_of(F.col("doc_id"), num_buckets)
+            )
+        )
+        extracted.write.mode("overwrite").partitionBy("bucket").parquet(table_path)
+        return observation
 
     processed = 0
     seq = log.next_seq()
+    error: Exception | None = None
+    in_flight: deque = deque()
+    todo = iter(groups)
     try:
-        for i in range(0, len(pending), batch_buckets):
-            group = pending[i : i + batch_buckets]
-            batch = corpus.filter(bucket_of(F.col("doc_id"), num_buckets).isin(group))
-            extract_kwargs = {} if max_size_bytes is None else {"max_size_bytes": max_size_bytes}
-            if ocr is not None:
-                extract_kwargs["ocr"] = ocr
-            extracted, observation = observe_batch_metrics(
-                extract(batch, **extract_kwargs).withColumn(
-                    "bucket", bucket_of(F.col("doc_id"), num_buckets)
-                )
-            )
-            extracted.write.mode("overwrite").partitionBy("bucket").parquet(table_path)
-            metrics = batch_metrics(observation)
-            log.commit(seq, group, metrics, num_buckets=num_buckets)
-            seq += 1
-            processed += 1
-            if fail_after_batches is not None and processed >= fail_after_batches:
-                raise RuntimeError(f"injected failure after {processed} batches")
+        with ThreadPoolExecutor(_IN_FLIGHT, thread_name_prefix="extract-batch") as pool:
+            while True:
+                while error is None and len(in_flight) < _IN_FLIGHT:
+                    group = next(todo, None)
+                    if group is None:
+                        break
+                    # the caller's local properties as of this submission
+                    props = jsc.getLocalProperties().clone()
+                    future = pool.submit(write_batch, props, seq, group)
+                    in_flight.append((seq, group, future))
+                    seq += 1
+                if not in_flight:
+                    break
+                batch_seq, group, future = in_flight.popleft()
+                try:
+                    metrics = batch_metrics(future.result())
+                    log.commit(batch_seq, group, metrics, num_buckets=num_buckets)
+                except Exception as e:  # drain: in-flight batches still commit
+                    if error is None:
+                        error = e
+                    continue
+                processed += 1
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    if error is not None:
+        raise error
+    if fail_after_batches is not None and processed >= fail_after_batches:
+        raise RuntimeError(f"injected failure after {processed} batches")
     return {
         "processed_batches": processed,
         "skipped_buckets": sorted(done),

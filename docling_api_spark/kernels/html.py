@@ -331,6 +331,8 @@ def extract_html(markup: str, media_prefix: str = "") -> list[dict]:
                     # caption text collected via cell machinery
                     in_cell = True
                     cell_parts = []
+                elif tag == "br":
+                    break_words()
                 continue
             if tag == "a":
                 anchor_depth += 1

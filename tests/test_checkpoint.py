@@ -4,8 +4,13 @@ uninterrupted run, without reprocessing committed buckets."""
 
 from __future__ import annotations
 
+import os
+import threading
+import time
+
 import pytest
 
+from docling_api_spark import checkpoint
 from docling_api_spark.checkpoint import (
     CommitLog,
     commit_history,
@@ -63,6 +68,121 @@ def test_killed_and_resumed_equals_uninterrupted(spark, corpus, tmp_path):
     assert res["processed_batches"] == 2
 
     assert _content(spark, resumed) == _content(spark, full)
+
+
+def _bucket_dirs(path):
+    return {int(n[len("bucket=") :]) for n in os.listdir(path) if n.startswith("bucket=")}
+
+
+def test_batches_overlap(spark, corpus, tmp_path, monkeypatch):
+    """Two batches are in flight at once: each batch's ``extract``
+    waits for the other's before returning, which a one-batch-at-a-time
+    run can never satisfy (the barrier times out and breaks)."""
+    barrier = threading.Barrier(2, timeout=60)
+    orig = checkpoint.extract
+
+    def meet(*args, **kwargs):
+        out = orig(*args, **kwargs)
+        barrier.wait()
+        return out
+
+    monkeypatch.setattr(checkpoint, "extract", meet)
+    out = str(tmp_path / "t")
+    res = extract_with_checkpoint(corpus, out, num_buckets=4, batch_buckets=2)
+    assert res["processed_batches"] == 2
+    assert spark.read.parquet(out).count() == 500
+
+
+def test_manifests_published_in_seq_order_with_own_metrics(spark, corpus, tmp_path, monkeypatch):
+    """Batch seq 0 is held back so later batches finish writing before
+    it; manifests must still be published seq by seq, and each seq must
+    carry its own bucket group and that group's metrics."""
+    orig_extract, orig_commit = checkpoint.extract, CommitLog.commit
+    published = []
+
+    def slow_first(*args, **kwargs):
+        # the batch thread has named its jobs before it plans
+        if spark.sparkContext.getLocalProperty("spark.job.description").startswith(
+            "extract batch seq=0 "
+        ):
+            time.sleep(3)
+        return orig_extract(*args, **kwargs)
+
+    def record(log, seq, *args, **kwargs):
+        published.append(seq)
+        orig_commit(log, seq, *args, **kwargs)
+
+    monkeypatch.setattr(checkpoint, "extract", slow_first)
+    monkeypatch.setattr(CommitLog, "commit", record)
+    out = str(tmp_path / "t")
+    extract_with_checkpoint(corpus, out, num_buckets=8, batch_buckets=2)
+    assert published == [0, 1, 2, 3]
+    rows = (
+        spark.read.parquet(out)
+        .selectExpr(
+            "bucket",
+            "size(spans) AS n",
+            "aggregate(spans, 0L, (a, s) -> a + coalesce(length(s.text), 0)) AS c",
+        )
+        .collect()
+    )
+    for c in CommitLog(out).commits():
+        assert c["buckets"] == [2 * c["seq"], 2 * c["seq"] + 1]
+        mine = [r for r in rows if r.bucket in c["buckets"]]
+        assert c["metrics"] == {
+            "docs": len(mine),
+            "spans": sum(r.n for r in mine),
+            "chars": sum(r.c for r in mine),
+        }
+
+
+def test_failed_commit_drains_in_flight_batches(spark, corpus, tmp_path, monkeypatch):
+    """A commit that raises at seq 1 (after publishing, the way a job
+    stopped at a deadline ends) submits no new batch, lets the batches
+    in flight commit, then re-raises: every bucket directory in the
+    table has a manifest, and a resume equals an uninterrupted run."""
+    full = str(tmp_path / "full")
+    extract_with_checkpoint(corpus, full, num_buckets=16, batch_buckets=2)
+
+    orig_commit = CommitLog.commit
+
+    def failing(log, seq, *args, **kwargs):
+        orig_commit(log, seq, *args, **kwargs)
+        if seq == 1:
+            raise OSError("commit failed")
+
+    monkeypatch.setattr(CommitLog, "commit", failing)
+    out = str(tmp_path / "t")
+    with pytest.raises(OSError, match="commit failed"):
+        extract_with_checkpoint(corpus, out, num_buckets=16, batch_buckets=2)
+    committed = CommitLog(out).completed_buckets()
+    assert _bucket_dirs(out) <= committed
+    # seq 0's commit let seq 1 + _IN_FLIGHT - 1 in; nothing after it ran
+    assert committed == set(range(2 * (1 + checkpoint._IN_FLIGHT)))
+
+    monkeypatch.setattr(CommitLog, "commit", orig_commit)
+    res = extract_with_checkpoint(corpus, out, num_buckets=16, batch_buckets=2)
+    assert res["processed_batches"] == (16 - len(committed)) // 2
+    assert _content(spark, out) == _content(spark, full)
+
+
+def test_batch_jobs_carry_caller_job_group(spark, corpus, tmp_path):
+    """Batch threads run with the caller's local properties, so a job
+    group the caller set reaches the batch jobs, and each job is named
+    after its batch without renaming the caller's own jobs."""
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt-group", "checkpoint test")
+    try:
+        extract_with_checkpoint(corpus, str(tmp_path / "t"), num_buckets=4, batch_buckets=2)
+        assert sc.getLocalProperty("spark.job.description") == "checkpoint test"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    ids = sc.statusTracker().getJobIdsForGroup("ckpt-group")
+    assert ids
+    store = sc._jsc.sc().statusStore()
+    descriptions = {store.job(i).description().get() for i in ids}
+    assert descriptions == {"extract batch seq=0 buckets=0,1", "extract batch seq=1 buckets=2,3"}
 
 
 def test_resume_is_noop_when_complete(spark, corpus, tmp_path):

@@ -73,6 +73,7 @@ tag_soup = st.lists(_piece(), max_size=40).map("".join)
 @example("0<nav>1</nav>0")
 @example("<p>ab<script>x</script>cd</p>")
 @example("<table>q<nav>z</nav>r</table>")
+@example("<table><tr><td>a<br>b</td></tr><caption>c<br/>d</caption>e<br>f</table>")
 def test_tag_soup_safety(markup):
     spans = extract_html(markup)
     # deterministic
@@ -213,6 +214,20 @@ def test_table_edge_shapes():
     # inter-row whitespace does not become a foster span
     spans = extract_html("<table><tr><td>a</td></tr>\n  \n</table>")
     assert [(s["kind"], s["text"]) for s in spans] == [("table", "a")]
+
+
+def test_br_inside_table_separates_words():
+    # cell, caption and fostered text: <br> is a word break everywhere,
+    # as outside a table
+    spans = extract_html(
+        "<table><caption>cap<br>tion</caption><tr><td>a<br>b</td><td>c<br/>d</td></tr>"
+        "x<br>y</table>"
+    )
+    assert [(s["kind"], s["text"]) for s in spans] == [
+        ("table", "a b | c d"),
+        ("caption", "cap tion"),
+        ("text", "x y"),
+    ]
 
 
 def test_anchor_semantics_unchanged_when_closed():
