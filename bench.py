@@ -468,9 +468,9 @@ def _scaling_child(sf_dir: str, cpus: str, repl: int) -> dict:
         wrap_documents_as_pdf_corpus,
     )
 
-    # SPARK_GRAFT_SCALE_FMT=pdf exercises the multi-span shard path
-    # (salted page spread + reassembly) instead of the single-span
-    # fast path — the shard machinery's own scaling evidence
+    # SPARK_GRAFT_SCALE_FMT=pdf scales a multi-span corpus (two pages
+    # per doc through the salted page spread + reassembly) instead of
+    # one raw span per doc — the page-shard spread's own scaling evidence
     fmt = os.environ.get("SPARK_GRAFT_SCALE_FMT", "html")
     wrap = wrap_documents_as_pdf_corpus if fmt == "pdf" else wrap_documents_as_corpus
 

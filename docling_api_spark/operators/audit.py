@@ -26,14 +26,15 @@ drawings) — and refs shared across documents, since the production
 logo URL is normal) and the media sidecar keys rows per
 ``(doc_id, media_ref)``.
 
-Scale shape: ONE narrow explode of the table into a persisted
-(doc_id, kind, media_ref, ord) projection; both audits aggregate that
-cached frame (partial+final hash aggs), so the materialized table is
-scanned once per job however many rules run. Text never rides a
-shuffle; violation frames are empty in the healthy case, so the
-bounded limit(k) sample feeding the error message does no meaningful
-driver work (and only runs when the job is about to abort — see the
-guard-exempt pragma).
+Scale shape: ONE pass. A narrow explode of the table into
+(doc_id, kind, media_ref, ord) feeds a single per-doc hash aggregation
+carrying the order statistics and the doc's media-violation row count,
+and one global sum over those per-doc rows yields both violation
+counts — one action, nothing persisted, the materialized table scanned
+once however many rules run. Text never rides a shuffle. Only when a
+count is non-zero (the job is about to abort) are the violation frames
+re-derived for the bounded limit(k) sample in the error message — see
+the guard-exempt pragma.
 """
 
 from __future__ import annotations
@@ -80,20 +81,25 @@ def span_order_violations(extracted: DataFrame) -> DataFrame:
     return _order_violations(_spans_flat(extracted))
 
 
-def _order_violations(s: DataFrame) -> DataFrame:
-    agg = s.groupBy("doc_id").agg(
+def _dense_order():
+    return (
+        (F.col("min_ord") == 0)
+        & (F.col("max_ord") == F.col("n_spans") - 1)
+        & (F.col("n_distinct") == F.col("n_spans"))
+    )
+
+
+def _order_stats():
+    return (
         F.count("*").alias("n_spans"),
         F.min("ord").alias("min_ord"),
         F.max("ord").alias("max_ord"),
         F.count_distinct("ord").alias("n_distinct"),
     )
-    return agg.filter(
-        ~(
-            (F.col("min_ord") == 0)
-            & (F.col("max_ord") == F.col("n_spans") - 1)
-            & (F.col("n_distinct") == F.col("n_spans"))
-        )
-    )
+
+
+def _order_violations(s: DataFrame) -> DataFrame:
+    return s.groupBy("doc_id").agg(*_order_stats()).filter(~_dense_order())
 
 
 def media_ref_violations(extracted: DataFrame) -> DataFrame:
@@ -105,42 +111,64 @@ def media_ref_violations(extracted: DataFrame) -> DataFrame:
     return _media_violations(_spans_flat(extracted))
 
 
-def _media_violations(s: DataFrame) -> DataFrame:
-    ref_on_non_media = s.filter(
+def _ref_on_non_media():
+    return (
         (F.col("media_ref") != "")
         & (F.col("media_ref") != _NULL_REF)
         & (F.col("kind") != "image")
-    ).select("doc_id", "media_ref", "kind", F.lit("ref_on_non_media_span").alias("violation"))
+    )
+
+
+def _null_ref():
     # NULL media_ref on ANY span is a corrupt write: the engine writes
     # empty string, never NULL (the explode_outer NULL-spans row is
     # order-audited, not double-counted here)
-    null_ref = s.filter(
-        (F.col("media_ref") == _NULL_REF) & (F.col("kind") != "<null-kind>")
-    ).select("doc_id", "media_ref", "kind", F.lit("null_media_ref").alias("violation"))
+    return (F.col("media_ref") == _NULL_REF) & (F.col("kind") != "<null-kind>")
+
+
+def _media_violations(s: DataFrame) -> DataFrame:
+    ref_on_non_media = s.filter(_ref_on_non_media()).select(
+        "doc_id", "media_ref", "kind", F.lit("ref_on_non_media_span").alias("violation")
+    )
+    null_ref = s.filter(_null_ref()).select(
+        "doc_id", "media_ref", "kind", F.lit("null_media_ref").alias("violation")
+    )
     return ref_on_non_media.unionByName(null_ref)
 
 
+def _violation_counts(s: DataFrame) -> tuple[int, int]:
+    """(docs violating span order, media-violation rows) in one
+    aggregation: per doc, the order stats plus the doc's media-violation
+    row count; then one global sum. The two media predicates are
+    disjoint, so the row count equals ``_media_violations(s).count()``."""
+    per_doc = s.groupBy("doc_id").agg(
+        *_order_stats(),
+        F.count_if(_ref_on_non_media() | _null_ref()).alias("n_media"),
+    )
+    totals = per_doc.agg(
+        F.count_if(~_dense_order()).alias("n_order"),
+        F.sum("n_media").alias("n_media"),
+    ).first()
+    # sums over zero docs are NULL: an empty table has no violations
+    return int(totals["n_order"] or 0), int(totals["n_media"] or 0)
+
+
 def assert_extraction_invariants(extracted: DataFrame, sample: int = 5) -> dict:
-    """Run both audits over ONE persisted narrow projection of the
-    table; raise :class:`ExtractionAuditError` naming up to ``sample``
-    offending rows if either finds a violation. Returns the violation
-    counts (all zero) for the job's metrics line."""
-    s = _spans_flat(extracted).persist()
-    try:
-        order_bad = _order_violations(s)
-        media_bad = _media_violations(s)
-        n_order = order_bad.count()
-        n_media = media_bad.count()
-        if n_order or n_media:
-            examples = []
-            if n_order:
-                examples += [f"span_order {r.asDict()}" for r in order_bad.limit(sample).collect()]  # guard-exempt: bounded-error-sample
-            if n_media:
-                examples += [f"media_ref {r.asDict()}" for r in media_bad.limit(sample).collect()]  # guard-exempt: bounded-error-sample
-            raise ExtractionAuditError(
-                f"extraction output violates invariants: {n_order} span-order, "
-                f"{n_media} media-ref; examples: " + "; ".join(examples)
-            )
-    finally:
-        s.unpersist()
+    """Count both audits' violations in ONE aggregation over a narrow
+    projection of the table (one action, no persist); raise
+    :class:`ExtractionAuditError` naming up to ``sample`` offending rows
+    if either count is non-zero. Returns the violation counts (all zero)
+    for the job's metrics line."""
+    s = _spans_flat(extracted)
+    n_order, n_media = _violation_counts(s)
+    if n_order or n_media:
+        examples = []
+        if n_order:
+            examples += [f"span_order {r.asDict()}" for r in _order_violations(s).limit(sample).collect()]  # guard-exempt: bounded-error-sample
+        if n_media:
+            examples += [f"media_ref {r.asDict()}" for r in _media_violations(s).limit(sample).collect()]  # guard-exempt: bounded-error-sample
+        raise ExtractionAuditError(
+            f"extraction output violates invariants: {n_order} span-order, "
+            f"{n_media} media-ref; examples: " + "; ".join(examples)
+        )
     return {"span_order_violations": 0, "media_ref_violations": 0}

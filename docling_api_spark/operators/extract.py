@@ -11,10 +11,14 @@ Scale design (the 100 TB story):
   (north_rule's oversized-PDF shards). The explicit
   ``repartition(P, xxhash64(doc_id, offset))`` spreads pages of the
   same doc uniformly across the cluster.
-* **One shuffle in, one shuffle out.** The salted repartition is the
-  only pre-kernel shuffle; reassembly is a single hash aggregation on
-  doc_id (partial aggregation applies — collect_list combines
-  map-side). No driver-side collection anywhere.
+* **One path, one shuffle in, one shuffle out.** Every document,
+  single-span or paged, takes the same route: the salted repartition is
+  the only pre-kernel shuffle, one ``mapInPandas`` stage runs the
+  kernels, and reassembly is a single hash aggregation on doc_id
+  (partial aggregation applies — collect_list combines map-side). A
+  plan scans the corpus once and crosses into Python once; single-span
+  docs pay for that by shuffling their output spans through the
+  reassembly (see ``extract``). No driver-side collection anywhere.
 * **Arrow-only Python.** Kernels run inside ``mapInPandas`` batches;
   there is no row-at-a-time Spark UDF on this path (input_hint
   contract).
@@ -184,48 +188,6 @@ def reassemble(flat: DataFrame) -> DataFrame:
     )
 
 
-ASSEMBLED_DDL = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,order:int,page:int>>"
-)
-
-
-def _extract_single_batches_fn(ocr=None):
-    """Fast path: one input row = one single-raw-span doc = one output
-    row with the complete assembled spans array — no reassembly."""
-
-    def _extract_single_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_spans = [], []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                s = spans[0]
-                try:
-                    res = extract_raw_span(s["kind"], s["text"], ocr=ocr)
-                except Exception as e:  # noqa: BLE001 — quarantine, never fail the task
-                    res = [
-                        {"kind": ERROR_KIND, "text": f"{type(e).__name__}: {e}", "media_ref": ""}
-                    ]
-                # mirror _extract_batches: paged kinds carry their page
-                # number in the raw offset; other formats are pageless
-                page = int(s["offset"]) if s["kind"] in PAGED_KINDS else 0
-                out_ids.append(doc_id)
-                out_spans.append(
-                    [
-                        {
-                            "kind": r["kind"],
-                            "text": r["text"],
-                            "media_ref": r["media_ref"],
-                            "order": i,
-                            "page": page,
-                        }
-                        for i, r in enumerate(res)
-                    ]
-                )
-            yield pd.DataFrame({"doc_id": out_ids, "spans": out_spans})
-
-    return _extract_single_batches
-
-
 def extract(
     corpus: DataFrame,
     *,
@@ -235,49 +197,33 @@ def extract(
 ) -> DataFrame:
     """corpus → extracted(doc_id, spans): the full pipeline.
 
-    Two physical paths, identical semantics:
+    One physical path for every document: ``extract_flat`` (salted
+    repartition of the raw spans, one ``mapInPandas`` kernel pass) and
+    ``reassemble`` (one hash aggregation on doc_id). A single-span doc
+    (HTML/DOCX, the bulk of a web corpus) is simply a doc with one raw
+    span, so a plan scans the corpus once and crosses into Python once.
+    The price is that single-span docs shuffle their OUTPUT spans
+    through the reassembly aggregate (+17-23% shuffle bytes measured on
+    ~31-doc, mostly-HTML batches); a separate shuffle-free leg for them
+    would cost a second corpus scan, exchange and Python stage per
+    plan, which is what dominates small batches.
 
-    * **single-raw-span docs** (HTML/DOCX — the bulk of a web corpus):
-      the kernel output of one input row IS the complete ordered doc,
-      so extraction is a pure map — ZERO shuffles (one balancing
-      repartition when ``salt_partitions`` is set, but no reassembly
-      aggregation). This is the majority path at 100 TB.
-    * **multi-span docs** (PDFs, one raw span per page): pages spread
-      via the salted repartition, extract independently, reassemble
-      with the single hash-agg (the skew-defusing shard path).
-
-    Both paths produce (doc_id, spans) with order 0..n-1; outputs are
-    unioned (equivalence pinned by tests/test_extract_spark.py).
+    Page provenance comes from the raw offset, zero-output docs vanish
+    (groupBy over zero rows), and a doc with ANY errored raw span is
+    excluded whole — the reference's per-document status='error'
+    (api/routes/documents.py:59-71); the error surfaces via
+    ``extract_errors``.
     """
-    spark = corpus.sparkSession
-    if salt_partitions is None:
-        salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    gated = corpus.filter(F.col("size_bytes") <= F.lit(max_size_bytes))
-    single = gated.filter(F.size("spans") == 1).select("doc_id", "spans")
-    multi = gated.filter(F.size("spans") != 1)
-    if salt_partitions:
-        # balance only (cheap narrow rows in, no post-shuffle agg)
-        single = single.repartition(salt_partitions, F.xxhash64("doc_id"))
-    # quarantine semantics (reference: whole document gets
-    # status='error', api/routes/documents.py:59-71): a doc with ANY
-    # errored raw span is excluded here — the error surfaces via
-    # ``extract_errors``. zero-output docs vanish on the reassembly
-    # path (groupBy over zero rows) — drop them here too so path
-    # choice never changes the output.
     no_error = ~F.exists("spans", lambda s: s["kind"] == ERROR_KIND)
-    fast = single.mapInPandas(_extract_single_batches_fn(ocr), schema=ASSEMBLED_DDL).filter(
-        (F.size("spans") > 0) & no_error
-    )
-    slow = reassemble(
+    return reassemble(
         extract_flat(
-            multi,
+            corpus,
             max_size_bytes=max_size_bytes,
             salt_partitions=salt_partitions,
             keep_errors=True,
             ocr=ocr,
         )
     ).filter(no_error)
-    return fast.unionByName(slow)
 
 
 def extract_errors(

@@ -93,6 +93,31 @@ def test_media_ref_violations_detected(spark):
         assert_extraction_invariants(bad)
 
 
+def test_both_violation_kinds_counted_in_one_table(spark):
+    """One table holding both kinds of violation: the one-pass count
+    must report each kind's own total — docs with an order gap, and
+    media-violation rows (both media rules) — in one message."""
+    gap = _doc(spark, 20, [("text", "a", "", 0), ("text", "b", "", 2)])
+    dup = _doc(spark, 21, [("text", "a", "", 1), ("text", "b", "", 1)])
+    refs = _doc(
+        spark, 22,
+        [
+            ("text", "a", "22/m0", 0),   # ref on a non-media span
+            ("text", "b", None, 1),       # NULL media_ref
+            ("table", "c", "22/m1", 2),  # ref on a non-media span
+        ],
+    )
+    clean = _doc(spark, 23, [("image", "", "23/m0", 0), ("text", "d", "", 1)])
+    table = gap.unionByName(dup).unionByName(refs).unionByName(clean)
+    assert span_order_violations(table).count() == 2
+    assert media_ref_violations(table).count() == 3
+    with pytest.raises(ExtractionAuditError) as err:
+        assert_extraction_invariants(table)
+    msg = str(err.value)
+    assert "2 span-order, 3 media-ref" in msg
+    assert msg.count("span_order {") == 2 and msg.count("media_ref {") == 3
+
+
 def test_legitimate_kernel_output_not_flagged(spark):
     """The audit must be exactly as strict as the kernel guarantees:
     kernels emit media_ref='' for ref-less source media (<img> with no

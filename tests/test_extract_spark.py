@@ -34,11 +34,11 @@ def test_extract_stable_under_salting(spark):
     assert [r.asDict() for r in a.collect()] == [r.asDict() for r in b.collect()]
 
 
-def test_fast_slow_path_equivalence_edge_cases(spark):
-    """The shuffle-free single-span fast path must agree with the
-    reassembly path on (a) pdf_page page provenance from a nonzero raw
-    offset and (b) docs whose kernel output is empty (must vanish on
-    both paths)."""
+def test_extract_edge_cases_page_provenance_and_empty_output(spark):
+    """Single-span docs go through the same shard path as paged ones:
+    (a) a single-span pdf_page doc takes its page number from its
+    nonzero raw offset and (b) a doc whose kernel output is empty
+    vanishes from extract() (reassembly groups zero rows)."""
     from pyspark.sql import Row
 
     span = lambda kind, text, off: Row(kind=kind, text=text, media_ref="", offset=off)  # noqa: E731
@@ -65,16 +65,11 @@ def test_fast_slow_path_equivalence_edge_cases(spark):
         ),
     ]
     corpus = spark.createDataFrame(rows)
-    fast_out = {r["doc_id"]: r["spans"] for r in extract(corpus, salt_partitions=2).collect()}
-    from docling_api_spark.operators.extract import reassemble
-
-    slow_out = {
-        r["doc_id"]: r["spans"]
-        for r in reassemble(extract_flat(corpus, salt_partitions=2)).collect()
-    }
-    assert set(fast_out) == set(slow_out) == {"p1"}  # e1 vanishes on both
-    assert [s.asDict() for s in fast_out["p1"]] == [s.asDict() for s in slow_out["p1"]]
-    assert fast_out["p1"][0]["page"] == 4
+    out = {r["doc_id"]: r["spans"] for r in extract(corpus, salt_partitions=2).collect()}
+    assert set(out) == {"p1"}  # e1 vanishes
+    assert [s.asDict() for s in out["p1"]] == [
+        {"kind": "heading", "text": "Solo page", "media_ref": "", "order": 0, "page": 4}
+    ]
 
 
 def test_size_gate(spark):
@@ -166,8 +161,9 @@ def test_media_page_render_fallback_lanes(spark):
 def test_error_quarantine_never_fails_the_task(spark):
     """A kernel exception on one doc must not kill the batch: clean
     docs extract normally, the poisoned doc lands in extract_errors
-    with status='error' — on BOTH physical paths (single-span fast
-    path and multi-span reassembly path)."""
+    with status='error' — whether the poisoned span is a doc's only
+    raw span or one page of a multi-span doc (the rest of which is
+    then dropped with it)."""
     from pyspark.sql import Row
 
     from docling_api_spark.operators.extract import extract_errors
@@ -175,17 +171,17 @@ def test_error_quarantine_never_fails_the_task(spark):
     span = lambda kind, text, off: Row(kind=kind, text=text, media_ref="", offset=off)  # noqa: E731
     corpus = spark.createDataFrame(
         [
-            # clean single-span doc (fast path)
+            # clean single-span doc
             Row(doc_id="ok1", fmt="pdf", size_bytes=10,
                 spans=[span("pdf_page", "BLOCK 0,0,100,10,para|fine", 1)]),
-            # poisoned single-span doc (fast path)
+            # poisoned single-span doc
             Row(doc_id="bad1", fmt="pdf", size_bytes=10,
                 spans=[span("pdf_page", "BLOCK xx,0,100,10,para|corrupt", 1)]),
-            # multi-span doc with ONE poisoned page (reassembly path)
+            # multi-span doc with ONE poisoned page
             Row(doc_id="bad2", fmt="pdf", size_bytes=10,
                 spans=[span("pdf_page", "BLOCK 0,0,100,10,para|good page", 1),
                        span("pdf_page", "BLOCK ,,,,|", 2)]),
-            # clean multi-span doc (reassembly path)
+            # clean multi-span doc
             Row(doc_id="ok2", fmt="pdf", size_bytes=10,
                 spans=[span("pdf_page", "BLOCK 0,0,100,10,para|p1", 1),
                        span("pdf_page", "BLOCK 0,0,100,10,para|p2", 2)]),

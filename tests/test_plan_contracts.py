@@ -60,10 +60,41 @@ def test_extraction_python_is_mapinpandas_only(spark):
 
 def test_quarantine_filter_adds_no_shuffle(spark):
     """extract() with the error filter has the same exchange count as
-    the documented shape: fast-path repartition + shard salt +
-    reassembly agg = 3."""
+    the documented one-path shape: salted repartition of the raw spans
+    + reassembly agg = 2."""
     plan = _plan(spark, "extract_span_counts")
-    assert plan.count("Exchange") == 3, plan
+    assert plan.count("Exchange") == 2, plan
+
+
+def test_checkpoint_batch_scans_corpus_once_one_python_stage(spark, tmp_path):
+    """The plan a checkpoint batch writes crosses into Python once: one
+    MapInPandas node over one scan of the corpus — no second
+    extraction leg with its own scan, exchange and Python stage."""
+    from docling_api_spark.checkpoint import extract_with_checkpoint
+    from docling_api_spark.sources.catalog import load, wrap_documents_as_corpus
+
+    corpus = wrap_documents_as_corpus(load(spark, SF, "documents"))
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        xs = store.executionsList()
+        return [xs.apply(i) for i in range(xs.size())]
+
+    before = max((x.executionId() for x in executions()), default=-1)
+    extract_with_checkpoint(corpus, str(tmp_path / "t"), num_buckets=1, batch_buckets=1)
+    plans = [x.physicalPlanDescription() for x in executions() if x.executionId() > before]
+    writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(writes) == 1
+    # the adaptive plan holds the final tree, then the initial one; the
+    # initial tree is checked too, since AQE drops a leg whose input
+    # turned out empty from the final one
+    final, initial = writes[0].split("== Final Plan ==")[1].split("== Initial Plan ==")
+    for tree in (final, initial.split("\n\n")[0]):
+        nodes = [re.sub(r"\s*\(\d+\).*", "", ln.lstrip(" :+-*")) for ln in tree.splitlines()]
+        assert nodes.count("MapInPandas") == 1, nodes
+        assert nodes.count("Scan parquet") == 1, nodes
 
 
 def test_cluster_edges_shuffle_on_hash_not_text(spark):
