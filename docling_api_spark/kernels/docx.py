@@ -14,100 +14,35 @@ Text of adjacent <w:t> runs inside one paragraph is concatenated; the
 usual XML entities are unescaped; whitespace collapsed. Paragraphs that
 normalize to empty are dropped.
 
-Tag-soup recovery (the input at corpus scale is never clean; behavior
-on well-formed WordprocessingML is unchanged — golden fixtures +
-oracle hashes identical):
-
-- blocks auto-close at the next block-level open or EOF, so an
-  unclosed ``<w:p>``/``<w:tbl>`` loses neither its own text nor the
-  document tail (the old span-to-next-closer regex silently swallowed
-  paragraphs between an unclosed table and the next table's closer);
-- stray markup inside recovered run text is stripped, never emitted
-  (well-formed ``<w:t>`` content escapes ``<`` as ``&lt;``, so the
-  strip is a no-op on clean input);
-- a trailing unclosed ``<w:t>`` contributes its text up to the next
-  tag instead of vanishing.
+Tag-soup recovery follows the shared contract of kernels/_markup.py:
+a paragraph auto-closes at the next block-level open or EOF; a table
+auto-closes at the next ``<w:tbl>`` or EOF — NOT at ``<w:p>``, because
+WordprocessingML legitimately nests paragraphs inside table cells —
+and the paragraphs of its body that sit outside every closed row
+(foster content) emit in source order after the table.
 """
 
 from __future__ import annotations
 
 import re
 
+from docling_api_spark.kernels._markup import blocks, run_reader, table_rows, table_text
+
 __all__ = ["extract_docx"]
 
-_BLOCK_OPEN_RE = re.compile(r"<w:p(?:\s[^>]*)?>|<w:tbl>")
-_TBL_OPEN_RE = re.compile(r"<w:tbl>")
-_P_CLOSE_RE = re.compile(r"</w:p>")
-_TBL_CLOSE_RE = re.compile(r"</w:tbl>")
+_BLOCK_OPEN_RE = re.compile(r"<w:(?:(?P<p>p)(?:\s[^>]*)?>|(?P<tbl>tbl)>)")
+_BOUNDS = {
+    "p": (re.compile(r"</w:p>"), _BLOCK_OPEN_RE),
+    "tbl": (re.compile(r"</w:tbl>"), re.compile(r"<w:tbl>")),
+}
 _T_RE = re.compile(r"<w:t(?:\s[^>]*)?>(.*?)</w:t>", re.DOTALL)
 _T_OPEN_TAIL_RE = re.compile(r"<w:t(?:\s[^>]*)?>([^<]*)")
-_TAG_RE = re.compile(r"<[^>]*>")
 _STYLE_RE = re.compile(r"<w:pStyle\s+w:val=\"([^\"]+)\"")
 _DRAWING_RE = re.compile(r"<w:drawing\s+r:embed=\"([^\"]+)\"\s*/?>")
 _TR_RE = re.compile(r"<w:tr(?:\s[^>]*)?>(.*?)</w:tr>", re.DOTALL)
 _TC_RE = re.compile(r"<w:tc(?:\s[^>]*)?>(.*?)</w:tc>", re.DOTALL)
-
-_ENTITIES = {"&amp;": "&", "&lt;": "<", "&gt;": ">", "&quot;": '"', "&apos;": "'"}
-_ENTITY_RE = re.compile("|".join(re.escape(k) for k in _ENTITIES))
-
-
-def _norm(text: str) -> str:
-    # Strip markup BEFORE unescaping so "&lt;w:t&gt;" stays literal
-    # text; well-formed run content contains no raw "<", so the strip
-    # only fires on recovered tag soup.
-    if "<" in text:
-        text = _TAG_RE.sub(" ", text)
-    if "&" in text:
-        text = _ENTITY_RE.sub(lambda m: _ENTITIES[m.group(0)], text)
-    # " ".join(split()) ≡ re.sub(r"\s+", " ", t).strip() for every Unicode
-    # codepoint (str.split and \s agree on the whitespace set), ~5x faster
-    return " ".join(text.split())
-
-
-def _para_text(body: str) -> str:
-    parts = []
-    last_end = 0
-    for m in _T_RE.finditer(body):
-        parts.append(m.group(1))
-        last_end = m.end()
-    # trailing unclosed <w:t> opens (their closers fell past an
-    # auto-close boundary) still contribute their immediate text
-    for tail in _T_OPEN_TAIL_RE.finditer(body, last_end):
-        parts.append(tail.group(1))
-    return _norm(" ".join(parts))
-
-
-def _blocks(xml: str):
-    """Yield ``(kind, body)`` blocks — ``kind`` in {"p", "tbl"} — in
-    document order (linear scan; no spanning regex that could swallow
-    intervening blocks). A paragraph's body runs to its ``</w:p>`` or
-    auto-closes at the next block-level open / EOF. A table's body
-    runs to its ``</w:tbl>`` or auto-closes at the next ``<w:tbl>`` /
-    EOF — NOT at ``<w:p>``, because WordprocessingML legitimately
-    nests paragraphs inside table cells."""
-    pos = 0
-    while True:
-        m = _BLOCK_OPEN_RE.search(xml, pos)
-        if m is None:
-            return
-        if m.group(0) == "<w:tbl>":
-            kind, close_re, bound_re = "tbl", _TBL_CLOSE_RE, _TBL_OPEN_RE
-        else:
-            kind, close_re, bound_re = "p", _P_CLOSE_RE, _BLOCK_OPEN_RE
-        nxt = bound_re.search(xml, m.end())
-        # bound the close search by the next open: a closer past it
-        # loses to auto-close anyway, and the bound keeps adversarial
-        # streams of unclosed opens linear instead of quadratic
-        close = close_re.search(xml, m.end(), nxt.start() if nxt else len(xml))
-        if close is not None:
-            yield kind, xml[m.end() : close.start()]
-            pos = close.end()
-        elif nxt is not None:
-            yield kind, xml[m.end() : nxt.start()]
-            pos = nxt.start()
-        else:
-            yield kind, xml[m.end() :]
-            return
+_STYLE_KIND = {"ListParagraph": "list_item", "Caption": "caption", "Code": "code"}
+_para_text = run_reader(_T_RE, _T_OPEN_TAIL_RE)
 
 
 def _emit_para(para: str, spans: list[dict], media_prefix: str) -> None:
@@ -119,47 +54,21 @@ def _emit_para(para: str, spans: list[dict], media_prefix: str) -> None:
     text = _para_text(para)
     if not text:
         return
-    if style.startswith("Heading"):
-        spans.append({"kind": "heading", "text": text, "media_ref": ""})
-    elif style == "ListParagraph":
-        spans.append({"kind": "list_item", "text": text, "media_ref": ""})
-    elif style == "Caption":
-        spans.append({"kind": "caption", "text": text, "media_ref": ""})
-    elif style == "Code":
-        spans.append({"kind": "code", "text": text, "media_ref": ""})
-    else:
-        spans.append({"kind": "text", "text": text, "media_ref": ""})
+    kind = "heading" if style.startswith("Heading") else _STYLE_KIND.get(style, "text")
+    spans.append({"kind": kind, "text": text, "media_ref": ""})
 
 
 def extract_docx(xml: str, media_prefix: str = "") -> list[dict]:
     """Extract ordered output spans from a simplified WordprocessingML body."""
     spans: list[dict] = []
-    for kind, body in _blocks(xml):
-        if kind == "tbl":
-            rows = []
-            leftover_parts = []
-            last_end = 0
-            for tr in _TR_RE.finditer(body):
-                rows.append([_para_text(tc.group(1)) for tc in _TC_RE.finditer(tr.group(1))])
-                leftover_parts.append(body[last_end : tr.start()])
-                last_end = tr.end()
-            leftover_parts.append(body[last_end:])
-            rows = [r for r in rows if r]
-            if rows:
-                ncols = max(len(r) for r in rows)
-                rows = [r + [""] * (ncols - len(r)) for r in rows]
-                spans.append(
-                    {"kind": "table", "text": "\n".join(" | ".join(row) for row in rows), "media_ref": ""}
-                )
-            # foster content: paragraphs in an (auto-closed) table body
-            # that sit outside every closed row — e.g. text after an
-            # unclosed table — emit in source order instead of
-            # vanishing (a well-formed table's body is rows only, so
-            # this loop finds nothing on clean input)
-            leftover = " ".join(leftover_parts)
-            for k2, b2 in _blocks(leftover):
-                if k2 == "p":
-                    _emit_para(b2, spans, media_prefix)
+    for kind, _, body in blocks(xml, _BLOCK_OPEN_RE, _BOUNDS):
+        if kind == "p":
+            _emit_para(body, spans, media_prefix)
             continue
-        _emit_para(body, spans, media_prefix)
+        rows, foster = table_rows(body, _TR_RE, _TC_RE, _para_text)
+        if rows:
+            spans.append({"kind": "table", "text": table_text(rows), "media_ref": ""})
+        for k2, _, b2 in blocks(foster, _BLOCK_OPEN_RE, _BOUNDS):
+            if k2 == "p":
+                _emit_para(b2, spans, media_prefix)
     return spans

@@ -35,6 +35,8 @@ from __future__ import annotations
 
 import re
 
+from docling_api_spark.kernels._markup import table_text
+
 __all__ = ["extract_html"]
 
 LINK_RATIO_MAX = 0.5  # block dropped if anchor chars / total chars > this
@@ -223,10 +225,7 @@ def extract_html(markup: str, media_prefix: str = "") -> list[dict]:
         close_open_cell()
         rows_present = [r for r in table_rows if r]  # no empty-text span for row-less tables
         if rows_present:
-            ncols = max(len(r) for r in rows_present)
-            rows = [r + [""] * (ncols - len(r)) for r in rows_present]
-            text = "\n".join(" | ".join(c for c in row) for row in rows)
-            spans.append({"kind": "table", "text": text, "media_ref": ""})
+            spans.append({"kind": "table", "text": table_text(rows_present), "media_ref": ""})
             if table_caption:
                 spans.append({"kind": "caption", "text": table_caption, "media_ref": ""})
         foster = _norm("".join(foster_parts))

@@ -21,13 +21,15 @@ floats). The kernel:
   4. classifies into the output span vocabulary.
 
 Table payload encodes rows with ``ROW_SEP`` and cells with ``CELL_SEP``
-and is re-rendered to the engine-wide table text format (cells joined
-by `` | ``, rows by newline). Figure payload is the media_ref.
+and is re-rendered to the engine-wide table text format
+(``_markup.table_text``). Figure payload is the media_ref.
 """
 
 from __future__ import annotations
 
 import math
+
+from docling_api_spark.kernels._markup import table_text
 
 __all__ = ["extract_pdf_page", "ROW_SEP", "CELL_SEP"]
 
@@ -145,39 +147,39 @@ def _xy_cut(blocks: list[tuple]) -> list[tuple]:
             continue
         gy, cy = _largest_gap_view(blocks, yview, _Y0, _Y1)
         gx, cx = _largest_gap_view(blocks, xview, _X0, _X1)
-        if cy is None and cx is None:
-            # final index = PARSE order, so ties on (y0, x0) break the
-            # same way the pre-view implementation did (stable sort of
-            # a parse-ordered list): yview arrives (y0, y1)-sorted, and
-            # without the index a y1 tiebreak would leak through on
-            # overlapping/degenerate layouts — a silent order change
-            # that gate corpora (spread float coords, no ties) miss.
-            ordered.extend(
-                blocks[i]
-                for i in sorted(yview, key=lambda i: (blocks[i][_Y0], blocks[i][_X0], i))
-            )
-            continue
-        if cx is not None and (cy is None or gx > gy):
-            lo, hi, cut = _X0, _X1, cx
-        else:
-            lo, hi, cut = _Y0, _Y1, cy
-        for i in yview:
-            b = blocks[i]
-            in_first[i] = (b[lo] + b[hi]) / 2.0 <= cut
-        stack.append(
-            ([i for i in yview if not in_first[i]], [i for i in xview if not in_first[i]])
-        )
-        stack.append(
-            ([i for i in yview if in_first[i]], [i for i in xview if in_first[i]])
+        if cy is not None or cx is not None:
+            if cx is not None and (cy is None or gx > gy):
+                lo, hi, cut = _X0, _X1, cx
+            else:
+                lo, hi, cut = _Y0, _Y1, cy
+            n_first = 0
+            for i in yview:
+                b = blocks[i]
+                in_first[i] = first = (b[lo] + b[hi]) / 2.0 <= cut
+                n_first += first
+            # an inverted box (x0 > x1 or y0 > y1) can put its mid-point
+            # on the far side of a gap in its own projection, so the cut
+            # may leave one side empty; re-pushing the same set would
+            # spin forever, so such a set is a leaf. With x0 <= x1 and
+            # y0 <= y1 both sides are always non-empty.
+            if 0 < n_first < len(yview):
+                stack.append(
+                    ([i for i in yview if not in_first[i]], [i for i in xview if not in_first[i]])
+                )
+                stack.append(
+                    ([i for i in yview if in_first[i]], [i for i in xview if in_first[i]])
+                )
+                continue
+        # leaf: final index = PARSE order, so ties on (y0, x0) break the
+        # same way the pre-view implementation did (stable sort of a
+        # parse-ordered list): yview arrives (y0, y1)-sorted, and
+        # without the index a y1 tiebreak would leak through on
+        # overlapping/degenerate layouts — a silent order change that
+        # gate corpora (spread float coords, no ties) miss.
+        ordered.extend(
+            blocks[i] for i in sorted(yview, key=lambda i: (blocks[i][_Y0], blocks[i][_X0], i))
         )
     return ordered
-
-
-def _render_table(payload: str) -> str:
-    rows = [r.split(CELL_SEP) for r in payload.split(ROW_SEP)]
-    ncols = max(len(r) for r in rows)
-    rows = [r + [""] * (ncols - len(r)) for r in rows]
-    return "\n".join(" | ".join(c.strip() for c in row) for row in rows)
 
 
 def extract_pdf_page(page_text: str, media_prefix: str = "") -> list[dict]:
@@ -191,7 +193,8 @@ def extract_pdf_page(page_text: str, media_prefix: str = "") -> list[dict]:
             continue
         payload = b[_PAYLOAD].strip()
         if kind == "table":
-            spans.append({"kind": "table", "text": _render_table(b[_PAYLOAD]), "media_ref": ""})
+            rows = [[c.strip() for c in r.split(CELL_SEP)] for r in b[_PAYLOAD].split(ROW_SEP)]
+            spans.append({"kind": "table", "text": table_text(rows), "media_ref": ""})
         elif kind == "image":
             # figure geometry survives as bbox provenance (reference
             # ImageInfo.bbox, core/schemas.py:26)

@@ -21,119 +21,48 @@ Shapes are emitted in document order; adjacent ``<a:t>`` runs inside a
 paragraph concatenate; entities unescape; whitespace collapses;
 paragraphs that normalize to empty are dropped.
 
-Tag-soup recovery (same contract as kernels/docx.py; behavior on
-well-formed slides unchanged — golden fixtures + oracle hashes
-identical): shapes auto-close at the next shape-level open or EOF
-instead of regex-spanning to a later closer (an unclosed
-``<p:graphicFrame>`` used to swallow every shape up to the NEXT
-frame's closer); a trailing unclosed ``<a:p>``/``<a:t>`` still
-contributes its text; stray markup inside recovered run text is
-stripped, never emitted.
+Tag-soup recovery follows the shared contract of kernels/_markup.py:
+shapes auto-close at the next shape-level open or EOF (the slide model
+never nests shapes, so well-formed boundaries are unchanged); a
+trailing unclosed ``<a:p>``/``<a:t>`` still contributes its text; the
+paragraphs of a frame body that sit outside every closed row (foster
+content) emit in source order after the table.
 """
 
 from __future__ import annotations
 
 import re
 
+from docling_api_spark.kernels._markup import blocks, elements, run_reader, table_rows, table_text
+
 __all__ = ["extract_pptx_slide"]
 
 _SHAPE_OPEN_RE = re.compile(
-    r"<p:sp\s+type=\"(title|body)\"\s*>"
-    r"|<p:pic\s+r:embed=\"([^\"]*)\"\s*/?>"
-    r"|<p:graphicFrame(?:\s[^>]*)?>"
+    r"<p:(?:sp\s+type=\"(?P<sp>title|body)\"\s*>"
+    r"|pic\s+r:embed=\"(?P<pic>[^\"]*)\"\s*/?>"
+    r"|(?P<frame>graphicFrame)(?:\s[^>]*)?>)"
 )
-_SP_CLOSE_RE = re.compile(r"</p:sp>")
-_FRAME_CLOSE_RE = re.compile(r"</p:graphicFrame>")
+_BOUNDS = {
+    "sp": (re.compile(r"</p:sp>"), _SHAPE_OPEN_RE),
+    "pic": None,  # <p:pic/> is self-contained
+    "frame": (re.compile(r"</p:graphicFrame>"), _SHAPE_OPEN_RE),
+}
 _PARA_RE = re.compile(r"<a:p(\s[^>]*)?>(.*?)</a:p>", re.DOTALL)
 _P_OPEN_TAIL_RE = re.compile(r"<a:p(\s[^>]*)?>(.*)", re.DOTALL)
 _T_RE = re.compile(r"<a:t(?:\s[^>]*)?>(.*?)</a:t>", re.DOTALL)
 _T_OPEN_TAIL_RE = re.compile(r"<a:t(?:\s[^>]*)?>([^<]*)")
-_TAG_RE = re.compile(r"<[^>]*>")
 _BULLET_RE = re.compile(r"bullet=\"1\"")
 _TR_RE = re.compile(r"<a:tr(?:\s[^>]*)?>(.*?)</a:tr>", re.DOTALL)
 _TC_RE = re.compile(r"<a:tc(?:\s[^>]*)?>(.*?)</a:tc>", re.DOTALL)
-
-_ENTITIES = {"&amp;": "&", "&lt;": "<", "&gt;": ">", "&quot;": '"', "&apos;": "'"}
-_ENTITY_RE = re.compile("|".join(re.escape(k) for k in _ENTITIES))
-
-
-def _norm(text: str) -> str:
-    # strip markup BEFORE unescaping so "&lt;a:t&gt;" stays literal
-    # text; well-formed run content contains no raw "<"
-    if "<" in text:
-        text = _TAG_RE.sub(" ", text)
-    if "&" in text:
-        text = _ENTITY_RE.sub(lambda m: _ENTITIES[m.group(0)], text)
-    # " ".join(split()) ≡ re.sub(r"\s+", " ", t).strip() for every Unicode
-    # codepoint (str.split and \s agree on the whitespace set), ~5x faster
-    return " ".join(text.split())
-
-
-def _runs_text(body: str) -> str:
-    parts = []
-    last_end = 0
-    for t in _T_RE.finditer(body):
-        parts.append(t.group(1))
-        last_end = t.end()
-    for tail in _T_OPEN_TAIL_RE.finditer(body, last_end):
-        parts.append(tail.group(1))
-    return _norm(" ".join(parts))
-
-
-def _paras(body: str):
-    """Closed ``<a:p>`` paragraphs plus a trailing unclosed one (its
-    closer fell past an auto-close boundary)."""
-    last_end = 0
-    for pm in _PARA_RE.finditer(body):
-        yield pm.group(1) or "", pm.group(2)
-        last_end = pm.end()
-    tail = _P_OPEN_TAIL_RE.search(body, last_end)
-    if tail:
-        yield tail.group(1) or "", tail.group(2)
-
-
-def _shapes(xml: str):
-    """Yield ``(kind, payload)`` shapes in document order — kind in
-    {"sp", "pic", "frame"} — linear scan with auto-close at the next
-    shape-level open / EOF (the slide model never nests shapes, so
-    well-formed boundaries are unchanged)."""
-    pos = 0
-    while True:
-        m = _SHAPE_OPEN_RE.search(xml, pos)
-        if m is None:
-            return
-        if m.group(2) is not None:  # <p:pic/> is self-contained
-            yield "pic", m.group(2)
-            pos = m.end()
-            continue
-        if m.group(1) is not None:
-            kind, close_re = "sp", _SP_CLOSE_RE
-        else:
-            kind, close_re = "frame", _FRAME_CLOSE_RE
-        nxt = _SHAPE_OPEN_RE.search(xml, m.end())
-        # bound the close search by the next open (see kernels/docx.py
-        # _blocks — keeps adversarial unclosed-open streams linear)
-        close = close_re.search(xml, m.end(), nxt.start() if nxt else len(xml))
-        if close is not None:
-            body = xml[m.end() : close.start()]
-            pos = close.end()
-        elif nxt is not None:
-            body = xml[m.end() : nxt.start()]
-            pos = nxt.start()
-        else:
-            body = xml[m.end() :]
-            pos = len(xml)
-        yield (kind, (m.group(1), body)) if kind == "sp" else (kind, body)
-        if pos >= len(xml):
-            return
+_runs_text = run_reader(_T_RE, _T_OPEN_TAIL_RE)
 
 
 def _emit_body_paras(body: str, spans: list[dict]) -> None:
-    for attrs, pbody in _paras(body):
-        text = _runs_text(pbody)
+    for pm in elements(body, _PARA_RE, _P_OPEN_TAIL_RE):
+        text = _runs_text(pm.group(2))
         if not text:
             continue
-        kind = "list_item" if _BULLET_RE.search(attrs) else "text"
+        kind = "list_item" if _BULLET_RE.search(pm.group(1) or "") else "text"
         spans.append({"kind": kind, "text": text, "media_ref": ""})
 
 
@@ -141,44 +70,19 @@ def extract_pptx_slide(xml: str, media_prefix: str = "") -> list[dict]:
     """Extract ordered output spans from one simplified PresentationML
     slide body."""
     spans: list[dict] = []
-    for kind, payload in _shapes(xml):
+    for kind, m, body in blocks(xml, _SHAPE_OPEN_RE, _BOUNDS):
         if kind == "pic":
-            spans.append(
-                {
-                    "kind": "image",
-                    "text": "",
-                    "media_ref": (media_prefix + payload) if payload else "",
-                }
-            )
+            ref = m.group("pic")
+            spans.append({"kind": "image", "text": "", "media_ref": (media_prefix + ref) if ref else ""})
         elif kind == "frame":
-            rows = []
-            leftover_parts = []
-            last_end = 0
-            for tr in _TR_RE.finditer(payload):
-                cells = [_runs_text(tc.group(1)) for tc in _TC_RE.finditer(tr.group(1))]
-                if cells:
-                    rows.append(cells)
-                leftover_parts.append(payload[last_end : tr.start()])
-                last_end = tr.end()
-            leftover_parts.append(payload[last_end:])
+            rows, foster = table_rows(body, _TR_RE, _TC_RE, _runs_text)
             if rows:
-                ncols = max(len(r) for r in rows)
-                rows = [r + [""] * (ncols - len(r)) for r in rows]
-                spans.append(
-                    {
-                        "kind": "table",
-                        "text": "\n".join(" | ".join(row) for row in rows),
-                        "media_ref": "",
-                    }
-                )
-            # foster content: paragraphs trapped in an (auto-closed)
-            # frame body outside every closed row — nothing on
-            # well-formed slides, whose frame bodies are rows only
-            _emit_body_paras(" ".join(leftover_parts), spans)
-        elif payload[0] == "title":
-            text = _runs_text(payload[1])
+                spans.append({"kind": "table", "text": table_text(rows), "media_ref": ""})
+            _emit_body_paras(foster, spans)
+        elif m.group("sp") == "title":
+            text = _runs_text(body)
             if text:
                 spans.append({"kind": "heading", "text": text, "media_ref": ""})
         else:  # body shape: one span per paragraph
-            _emit_body_paras(payload[1], spans)
+            _emit_body_paras(body, spans)
     return spans

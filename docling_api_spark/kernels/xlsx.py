@@ -17,12 +17,9 @@ Cell text is entity-unescaped and whitespace-collapsed; ragged rows are
 padded to the widest row (docx table convention); rows with no cells
 are dropped; a sheet whose grid is empty emits only its heading.
 
-Tag-soup recovery (same contract as kernels/docx.py; behavior on
-well-formed sheets unchanged — golden fixtures + oracle hashes
-identical): a sheet auto-closes at the next ``<sheet`` open or EOF
-instead of being silently dropped (an unclosed ``<sheet>`` used to
-lose its whole grid, or merge into the NEXT sheet's closer and drop
-that sheet's heading); a trailing unclosed ``<row>`` still yields its
+Tag-soup recovery follows the shared contract of kernels/_markup.py:
+a sheet auto-closes at the next ``<sheet`` open or EOF instead of
+being silently dropped; a trailing unclosed ``<row>`` still yields its
 closed cells; stray markup inside recovered cell text is stripped.
 """
 
@@ -30,71 +27,15 @@ from __future__ import annotations
 
 import re
 
+from docling_api_spark.kernels._markup import blocks, elements, norm_xml, table_text
+
 __all__ = ["extract_xlsx_sheet"]
 
-_SHEET_OPEN_RE = re.compile(r"<sheet\s+name=\"([^\"]*)\"\s*>")
-_SHEET_CLOSE_RE = re.compile(r"</sheet>")
+_SHEET_OPEN_RE = re.compile(r"<sheet\s+name=\"(?P<sheet>[^\"]*)\"\s*>")
+_BOUNDS = {"sheet": (re.compile(r"</sheet>"), _SHEET_OPEN_RE)}
 _ROW_RE = re.compile(r"<row(?:\s[^>]*)?>(.*?)</row>", re.DOTALL)
 _ROW_OPEN_TAIL_RE = re.compile(r"<row(?:\s[^>]*)?>(.*)", re.DOTALL)
 _CELL_RE = re.compile(r"<c(?:\s[^>]*)?>(.*?)</c>", re.DOTALL)
-_TAG_RE = re.compile(r"<[^>]*>")
-
-_ENTITIES = {"&amp;": "&", "&lt;": "<", "&gt;": ">", "&quot;": '"', "&apos;": "'"}
-_ENTITY_RE = re.compile("|".join(re.escape(k) for k in _ENTITIES))
-
-
-def _norm(text: str) -> str:
-    # strip markup BEFORE unescaping so "&lt;c&gt;" stays literal
-    # text; well-formed cell content contains no raw "<"
-    if "<" in text:
-        text = _TAG_RE.sub(" ", text)
-    if "&" in text:
-        text = _ENTITY_RE.sub(lambda m: _ENTITIES[m.group(0)], text)
-    # " ".join(split()) ≡ re.sub(r"\s+", " ", t).strip() for every Unicode
-    # codepoint (str.split and \s agree on the whitespace set), ~5x faster
-    return " ".join(text.split())
-
-
-def _sheets(xml: str):
-    """Yield ``(name, body)`` worksheets in document order — linear
-    scan; a sheet's body runs to its ``</sheet>`` or auto-closes at
-    the next ``<sheet`` open / EOF."""
-    pos = 0
-    while True:
-        m = _SHEET_OPEN_RE.search(xml, pos)
-        if m is None:
-            return
-        nxt = _SHEET_OPEN_RE.search(xml, m.end())
-        # bound the close search by the next open (see kernels/docx.py
-        # _blocks — keeps adversarial unclosed-open streams linear)
-        close = _SHEET_CLOSE_RE.search(xml, m.end(), nxt.start() if nxt else len(xml))
-        if close is not None:
-            yield m.group(1), xml[m.end() : close.start()]
-            pos = close.end()
-        elif nxt is not None:
-            yield m.group(1), xml[m.end() : nxt.start()]
-            pos = nxt.start()
-        else:
-            yield m.group(1), xml[m.end() :]
-            return
-
-
-def _grid_rows(body: str) -> list[list[str]]:
-    rows = []
-    last_end = 0
-    for rm in _ROW_RE.finditer(body):
-        cells = [_norm(c.group(1)) for c in _CELL_RE.finditer(rm.group(1))]
-        if cells:
-            rows.append(cells)
-        last_end = rm.end()
-    # a trailing unclosed <row> (its closer fell past an auto-close
-    # boundary) still yields its closed cells
-    tail = _ROW_OPEN_TAIL_RE.search(body, last_end)
-    if tail:
-        cells = [_norm(c.group(1)) for c in _CELL_RE.finditer(tail.group(1))]
-        if cells:
-            rows.append(cells)
-    return rows
 
 
 def extract_xlsx_sheet(xml: str, media_prefix: str = "") -> list[dict]:
@@ -102,19 +43,15 @@ def extract_xlsx_sheet(xml: str, media_prefix: str = "") -> list[dict]:
     worksheet: sheet-name heading followed by the cell grid as a table
     span in the engine-wide ``" | "``/newline table text format."""
     spans: list[dict] = []
-    for raw_name, body in _sheets(xml):
-        name = _norm(raw_name)
+    for _, m, body in blocks(xml, _SHEET_OPEN_RE, _BOUNDS):
+        name = norm_xml(m.group("sheet"))
         if name:
             spans.append({"kind": "heading", "text": name, "media_ref": ""})
-        rows = _grid_rows(body)
+        rows = []
+        for rm in elements(body, _ROW_RE, _ROW_OPEN_TAIL_RE):
+            cells = [norm_xml(c.group(1)) for c in _CELL_RE.finditer(rm.group(1))]
+            if cells:
+                rows.append(cells)
         if rows:
-            ncols = max(len(r) for r in rows)
-            rows = [r + [""] * (ncols - len(r)) for r in rows]
-            spans.append(
-                {
-                    "kind": "table",
-                    "text": "\n".join(" | ".join(row) for row in rows),
-                    "media_ref": "",
-                }
-            )
+            spans.append({"kind": "table", "text": table_text(rows), "media_ref": ""})
     return spans

@@ -388,7 +388,9 @@ def _html_escape(col):
 def tables_table(flat: DataFrame) -> DataFrame:
     """Side table of extracted tables (reference ExtractedTable,
     core/models.py:315-353): num_rows/num_cols derived from the
-    engine-wide table text format; markdown + html + csv renders
+    engine-wide table text format (written by every kernel through
+    ``kernels._markup.table_text``: rows padded to the widest, cells
+    joined by " | ", rows by newline); markdown + html + csv renders
     (reference exports all three, services/multimodal_service.py:53-59)."""
     from pyspark.sql import Window as W
 

@@ -23,7 +23,7 @@ _TOKS = S.toks("text")
 
 
 @query(
-    "asof_click_attribution", prio=20,
+    "asof_click_attribution",
     # as-of backward join (pandas merge_asof / kdb aj semantics): every
     # click attributed to the user's most recent view at-or-before it.
     # Oracle = the same union+running-last-value construction (the
@@ -65,7 +65,7 @@ def asof_click_attribution(spark, sf_dir):
 
 
 @query(
-    "range_join_shipments", prio=20,
+    "range_join_shipments",
     # range (interval) join: lineitems shipped inside each promo
     # order's 7-day window. Small interval side broadcast — the
     # scalable plan when ranges are few; banded-key prejoin when not.
@@ -103,7 +103,7 @@ def range_join_shipments(spark, sf_dir):
 
 
 @query(
-    "vocab_heavy_hitters", prio=20,
+    "vocab_heavy_hitters",
     # global token frequencies, top-20 (training-data vocabulary stats;
     # partial aggregation makes this one map-side-combined shuffle of
     # the DISTINCT token space, not the token stream)
@@ -129,7 +129,7 @@ def vocab_heavy_hitters(spark, sf_dir):
 
 
 @query(
-    "running_total_window", prio=20,
+    "running_total_window",
     # cumulative per-customer revenue (running-total window; decimal
     # accumulation so both engines sum exactly regardless of order)
     oracle="""
@@ -159,7 +159,7 @@ def running_total_window(spark, sf_dir):
 
 
 @query(
-    "dedup_clusters", prio=20,
+    "dedup_clusters",
     # pairs → clusters: connected components over the exact-duplicate
     # relation, label = min doc_id of the component (the survivor a
     # production dedup cascade keeps). Oracle = recursive-CTE
@@ -226,7 +226,7 @@ _BM25_TERMS = ("spark", "join", "window")
 
 
 @query(
-    "bm25_rank", prio=20,
+    "bm25_rank",
     # BM25 lexical retrieval (k1=1.2, b=0.75) — the classical lexical
     # leg of the reference's hybrid search (advanced_rag.py lexical
     # scoring, generalized to the standard ranking function). Corpus
@@ -284,7 +284,7 @@ def bm25_rank(spark, sf_dir):
 
 
 @query(
-    "hybrid_search_rrf", prio=20,
+    "hybrid_search_rrf",
     # the reference's HYBRID search (services/rag_service.py vector +
     # lexical legs, advanced_rag.py:221-234 RRF merge) as one composed
     # plan: BM25 lexical ranking ⊕ embedding-cosine ranking (our own
@@ -386,7 +386,7 @@ def hybrid_search_rrf(spark, sf_dir):
 
 
 @query(
-    "sequence_packing_plan", prio=8,
+    "sequence_packing_plan",
     # training-sequence packing layout (the document→fixed-length-
     # sequence step of an LLM pretraining pipeline): documents
     # concatenate in doc_id order into a token stream split at
@@ -437,7 +437,7 @@ def sequence_packing_plan(spark, sf_dir):
 
 
 @query(
-    "heavy_hitters_sketch", prio=20,
+    "heavy_hitters_sketch",
     # Misra-Gries heavy hitters (freq >= n/40) with exact counts — the
     # SCALE path for vocab_heavy_hitters' full-vocabulary agg: each
     # partition emits <= k sketch candidates (guaranteed-recall
@@ -466,7 +466,7 @@ def heavy_hitters_sketch(spark, sf_dir):
 
 
 @query(
-    "cdc_merge_upsert", prio=20,
+    "cdc_merge_upsert",
     # Batch MERGE-INTO semantics (the maintenance pass a mutable corpus
     # needs between pipeline runs): a deterministic change feed derived
     # from orders — deletes (key%11=3), status updates (key%7=0, delete
@@ -537,7 +537,7 @@ def _zorder_oracle() -> str:
 
 
 @query(
-    "zorder_layout_stats", prio=20,
+    "zorder_layout_stats",
     # Z-order (Morton) clustering key over (o_custkey, order epoch-day)
     # + per-bucket file-skipping statistics — the layout pass that
     # makes BOTH dimensions pruneable at scan time (Delta/Iceberg
@@ -577,7 +577,7 @@ def zorder_layout_stats(spark, sf_dir):
 
 
 @query(
-    "scd2_user_state", prio=20,
+    "scd2_user_state",
     # SCD-type-2 dimension build from a change log: collapse each
     # user's event stream to state-CHANGE rows (lag filter), then
     # assign validity intervals (lead) — the standard two-stacked-
@@ -631,7 +631,7 @@ def scd2_user_state(spark, sf_dir):
 
 
 @query(
-    "ewma_user_value", prio=20,
+    "ewma_user_value",
     # Exponentially-weighted moving average per user (alpha=0.5, seeded
     # with the first event) — the order-DEPENDENT fold Spark expresses
     # with the aggregate() higher-order function over a sort_array'd
@@ -668,7 +668,7 @@ def ewma_user_value(spark, sf_dir):
 
 
 @query(
-    "key_skew_profile", prio=20,
+    "key_skew_profile",
     # Join-key skew diagnosis (the report that decides salting/AQE skew
     # thresholds BEFORE a 100 TB join): rows-per-key histogram, i.e.
     # count-of-counts over the fact table's join key. Two map-side-
@@ -691,7 +691,7 @@ def key_skew_profile(spark, sf_dir):
 
 
 @query(
-    "table_profile_orders", prio=20,
+    "table_profile_orders",
     # Data-quality profile (ingest audit): per-column null count +
     # exact distinct count for the orders table, unpivoted to one row
     # per column. ONE pass for the null counts (conditional sums) +
@@ -739,7 +739,7 @@ def table_profile_orders(spark, sf_dir):
 
 
 @query(
-    "value_outlier_filter", prio=20,
+    "value_outlier_filter",
     # Tukey/IQR outlier audit per event_type: exact interpolated
     # quartiles (percentile = quantile_cont, the proven-equal pair from
     # median_price_by_status), 1.5×IQR fences, conditional count. The
@@ -785,7 +785,7 @@ def value_outlier_filter(spark, sf_dir):
 
 
 @query(
-    "dedup_clusters_star", prio=60,
+    "dedup_clusters_star",
     # Same pairs→clusters semantics as dedup_clusters (label = min
     # doc_id of the exact-duplicate component), computed with the
     # alternating large-star/small-star algorithm (Kiveris et al.,

@@ -81,7 +81,7 @@ def embed_hash_stats(spark, sf_dir):
 
 
 @query(
-    "chunk_embed_pipeline", prio=90,
+    "chunk_embed_pipeline",
     oracle=f"""
         WITH t AS (SELECT doc_id, {_TOKS} AS tok FROM documents),
         c AS (SELECT doc_id,
@@ -187,7 +187,7 @@ _ENC = 100000  # acc = n_closed_chunks * _ENC + tokens_in_open_chunk
 
 
 @query(
-    "chunk_hybrid_invariants", prio=8,
+    "chunk_hybrid_invariants",
     oracle=f"""
         WITH der AS (
             SELECT doc_id,
@@ -235,7 +235,7 @@ def chunk_hybrid_invariants(spark, sf_dir):
     )
 
 
-@query("chunk_documents_hybrid", prio=20)  # sentence-aware policy → rows-only driver check
+@query("chunk_documents_hybrid")  # sentence-aware policy → rows-only driver check
 def chunk_documents_hybrid(spark, sf_dir):
     """Hybrid (sentence-aware, heading-tracked) chunking of documents
     — the reference's actual chunking policy

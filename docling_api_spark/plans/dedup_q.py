@@ -175,7 +175,7 @@ def simhash_dup_pairs(spark, sf_dir):
 
 
 @query(
-    "dedup_cascade_survivors", prio=20,
+    "dedup_cascade_survivors",
     # the production dedup CASCADE (cheap→expensive): exact hash pass
     # shrinks the corpus, MinHash-LSH near-dup pass runs on the
     # survivors, smaller id survives each near-dup pair. Output = the
@@ -220,7 +220,7 @@ _BOILER_FOOT = "copyright corpus site all rights reserved"
 
 
 @query(
-    "boilerplate_line_dedup", prio=8,
+    "boilerplate_line_dedup",
     # CCNet/RefinedWeb-style line-level boilerplate removal: lines in
     # > max_df distinct docs are dropped, docs rebuilt in line order.
     # The oracle replays the SAME md5-prefix-32 line-hash grouping, so
@@ -273,7 +273,7 @@ def boilerplate_line_dedup_q(spark, sf_dir):
 
 
 @query(
-    "benchmark_decontamination", prio=8,
+    "benchmark_decontamination",
     # 13-gram benchmark decontamination (standard training-data
     # hygiene): the eval set is docs 0-4's text; a training doc is
     # contaminated iff it shares any distinct 13-word shingle with the
@@ -311,7 +311,7 @@ def benchmark_decontamination(spark, sf_dir):
 
 
 @query(
-    "curation_pipeline_audit", prio=8,
+    "curation_pipeline_audit",
     # the COMPOSED curation cascade (operators/curate.py): exact dedup
     # → MinHash near-dup → line cleanup (no-op on this single-line
     # corpus) → quality filter → 13-gram decontamination vs docs 0-4.
@@ -583,7 +583,7 @@ def exact_substring_remove(spark, sf_dir):
 
 
 @query(
-    "dedup_best_representative", prio=20,
+    "dedup_best_representative",
     # Quality-aware survivor selection: connected components over the
     # VERIFIED near-dup relation (Jaccard >= 0.8 — so exact copies AND
     # tail-suffixed near copies cluster together), then keep the
@@ -684,7 +684,7 @@ def dedup_best_representative(spark, sf_dir):
 
 
 @query(
-    "corpus_snapshot_diff", prio=20,
+    "corpus_snapshot_diff",
     # Snapshot diff between two corpus versions (the ops primitive for
     # incremental re-processing: only 'added'/'changed' docs re-enter
     # the pipeline). Both sides project to narrow (doc_id, hash32)
@@ -749,7 +749,7 @@ def corpus_snapshot_diff(spark, sf_dir):
 
 
 @query(
-    "incremental_near_dup", prio=7,
+    "incremental_near_dup",
     # Batch-vs-corpus near-dup (the daily-ingest shape): the planted
     # docs (id >= 1e6 — exact copies and near-dup tails) arrive as the
     # NEW batch and probe the base corpus (id < 1e6). Oracle =

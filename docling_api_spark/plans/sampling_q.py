@@ -6,10 +6,8 @@ no RNG, no accumulation-order-sensitive float sums — so each query is
 bit-reproducible across engines, re-runs, and repartitionings (the
 property a resumable 100 TB job actually needs from its sampler).
 
-Registered with default prio: the round-3 driver prefix is already
-full (plans/registry.py), so these gate locally via
-tests/test_oracle_parity.py this round and rotate into the driver
-prefix next round.
+These sit outside the driver prefix (plans/registry.py) and gate
+locally via tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations
@@ -587,7 +585,7 @@ _GSPLIT_B = S.md5long("source || '#gsplit-v1'") + " % 1000"
 
 
 @query(
-    "domain_frequency_cap", prio=7,
+    "domain_frequency_cap",
     # RefinedWeb-style per-domain cap: keep the 10 hash-ranked docs per
     # source. Per-domain kept counts + kept-id sums make every rank
     # decision hash-visible (one swapped rank changes kept_id_sum).
@@ -619,7 +617,7 @@ def domain_frequency_cap(spark, sf_dir):
 
 
 @query(
-    "group_leakage_split", prio=7,
+    "group_leakage_split",
     # Split keyed by GROUP (source), not doc: a group's docs can never
     # straddle train/eval. n_sources + per-split id sums pin every
     # group's assignment; n_splits_per_source = 1 is structural (split

@@ -21,7 +21,7 @@ DIM = 64
 
 
 @query(
-    "search_pipeline", prio=10,
+    "search_pipeline",
     # KNN over embeddings (vec_id keys the documents table here: the
     # driver's synthetic tables stand in for chunks/docs) → join doc
     # metadata → score 1/(1+dist)-style transform → formatted context
@@ -61,7 +61,7 @@ def search_pipeline(spark, sf_dir):
 
 
 @query(
-    "sessionize_events", prio=10,
+    "sessionize_events",
     # gap-based sessionization (30-min inactivity starts a new
     # session): the batch twin of the stateful-streaming session
     # operator; classic lag + conditional cumsum
@@ -101,7 +101,7 @@ def sessionize_events(spark, sf_dir):
 
 
 @query(
-    "session_funnel", prio=20,
+    "session_funnel",
     # Session funnel conversion: the sessionize construction (same lag
     # + conditional-cumsum, one user_id shuffle) rolled up per session
     # to view/click/purchase flags, then the corpus-level funnel —

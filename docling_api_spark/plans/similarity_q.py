@@ -30,7 +30,7 @@ def _query_vec(spark, sf_dir, vec_id: int = 0):
 
 
 @query(
-    "knn_cosine_topk", prio=10,
+    "knn_cosine_topk",
     oracle=f"""
         WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
         SELECT e.vec_id, {_COS} AS sim
@@ -47,7 +47,7 @@ def knn_cosine_topk(spark, sf_dir):
 
 
 @query(
-    "ann_lsh_topk", prio=10,
+    "ann_lsh_topk",
     oracle=f"""
         WITH {S.srp_planes_cte(DIM, 8)},
              {S.srp_sigs_cte("embeddings", "vec_id", "embedding", DIM)},
@@ -74,7 +74,7 @@ def ann_lsh_topk(spark, sf_dir):
 
 
 @query(
-    "embedding_dup_pairs", prio=10,
+    "embedding_dup_pairs",
     oracle=f"""
         WITH {S.DUP_VECTORS_CTE.strip()}
         SELECT a.vec_id AS a, b.vec_id AS b,
@@ -95,7 +95,7 @@ def embedding_dup_pairs_q(spark, sf_dir):
     return embedding_dup_pairs(e.unionByName(planted), dim=DIM, threshold=0.9, n_bits=8)
 
 
-@query("ivf_ann_topk", prio=10)  # approximate (KMeans internals) → rows-only driver check
+@query("ivf_ann_topk")  # approximate (KMeans internals) → rows-only driver check
 def ivf_ann_topk(spark, sf_dir):
     """IVF approximate top-k: KMeans(16) coarse cells, probe the 4
     nearest, exact rescoring inside. Recall vs brute force is asserted
@@ -108,7 +108,7 @@ def ivf_ann_topk(spark, sf_dir):
 
 
 @query(
-    "doc_embedding_dup_pairs", prio=10,
+    "doc_embedding_dup_pairs",
     # embedding-cosine near-dup over OUR embedder's vectors (brief:
     # dedup strategies over the documents table). Cosine is computed
     # from the embedder's raw INT bucket counts on both engines
@@ -160,7 +160,7 @@ def doc_embedding_dup_pairs(spark, sf_dir):
 
 
 @query(
-    "ivf_fixed_topk", prio=20,
+    "ivf_fixed_topk",
     # IVF probe pipeline with a DETERMINISTIC md5-derived coarse
     # quantizer: cell = argmax rounded-cosine(vector, centroid) with
     # cell-asc tie-break, probe the 4 nearest cells, exact rescoring.
@@ -203,7 +203,7 @@ def ivf_fixed_topk(spark, sf_dir):
 
 
 @query(
-    "multi_query_knn_rrf", prio=8,
+    "multi_query_knn_rrf",
     # the engine core of the reference's multi_query_search
     # (services/advanced_rag.py:199-252): N query variants each rank
     # the corpus, reciprocal-rank fusion 1/(60 + rank) merges them.
@@ -289,7 +289,7 @@ def semdedup_survivors(spark, sf_dir):
 
 
 @query(
-    "mutual_nn_pairs", prio=20,
+    "mutual_nn_pairs",
     # Mutual nearest neighbors (reciprocal top-1 cosine) — the
     # alignment/bitext-mining primitive: keep (a,b) only when each is
     # the other's best match. Exact brute force, capped at 200
@@ -371,7 +371,7 @@ def mutual_nn_pairs(spark, sf_dir):
 
 
 @query(
-    "centroid_label_purity", prio=7,
+    "centroid_label_purity",
     # Clustering-quality audit: assign every vector to its argmax-
     # cosine cell of the deterministic md5 coarse quantizer, then per
     # cell report the majority label and its purity (ppm, integer-
@@ -430,7 +430,7 @@ def centroid_label_purity(spark, sf_dir):
 
 
 @query(
-    "embedding_dim_health", prio=7,
+    "embedding_dim_health",
     # Per-dimension corpus audit (dead/collapsed-dimension detection —
     # the standard pre-flight before trusting cosine structure for
     # SemDeDup/ANN). Components quantize to round(v*1e6) BIGINT first,

@@ -26,7 +26,7 @@ def _as_stream_dir(sf_dir: str, table: str) -> str:
 
 
 @query(
-    "streaming_sessionize", prio=20,
+    "streaming_sessionize",
     # applyInPandasWithState gap-sessionization, availableNow; final
     # per-user state must equal the batch lag+cumsum sessionization
     oracle="""
@@ -73,7 +73,7 @@ def streaming_sessionize(spark, sf_dir):
 
 
 @query(
-    "streaming_windowed_metrics", prio=20,
+    "streaming_windowed_metrics",
     # watermarked tumbling-window aggregation, availableNow complete
     # mode; equals the batch tumbling aggregation when no data is late
     # past the watermark (single-batch input)
@@ -109,7 +109,7 @@ def streaming_windowed_metrics(spark, sf_dir):
 
 
 @query(
-    "streaming_exact_dedup", prio=20,
+    "streaming_exact_dedup",
     # stateful streaming hash-dedup (complete mode, availableNow); the
     # final state store contents must equal the batch dedup_exact
     # aggregation — MIN/COUNT commute across micro-batches, so the
@@ -148,7 +148,7 @@ def streaming_exact_dedup(spark, sf_dir):
 
 
 @query(
-    "streaming_incremental_dedup", prio=20,
+    "streaming_incremental_dedup",
     # foreachBatch ingest dedup: every micro-batch of new (planted)
     # docs probes the STATIC corpus's banded MinHash keys; per-new-doc
     # matches are independent of batching, so the drained parquet sink

@@ -25,7 +25,7 @@ _TOKS = S.toks("text")
 
 
 @query(
-    "token_count_bpe", prio=5,  # cheapest query first: absorbs session warmup
+    "token_count_bpe",
     oracle=f"""
         SELECT doc_id,
                len({_TOKS}) AS n_ws_tokens,
@@ -50,7 +50,7 @@ from docling_api_spark.functions.textstats import STOP_EN as _STOP_EN  # noqa: E
 
 
 @query(
-    "textstats_quality", prio=10,
+    "textstats_quality",
     oracle=f"""
         WITH t AS (SELECT doc_id, n_chars, {_TOKS} AS tok FROM documents)
         SELECT doc_id,
@@ -104,7 +104,7 @@ def _lang_score_sql(lang: str) -> str:
 
 
 @query(
-    "langid_heuristic", prio=10,
+    "langid_heuristic",
     oracle=f"""
         WITH t AS (SELECT doc_id, {_TOKS} AS tok FROM documents)
         SELECT doc_id,
@@ -155,7 +155,7 @@ def langid_heuristic(spark, sf_dir):
 
 
 @query(
-    "doc_fingerprint", prio=10,
+    "doc_fingerprint",
     oracle=f"""
         WITH t AS (SELECT doc_id, {_TOKS} AS tok FROM documents)
         SELECT doc_id, {S.fingerprint("tok")} AS fp, {S.md5long("doc_id::VARCHAR")} AS id_hash
@@ -174,7 +174,7 @@ def doc_fingerprint(spark, sf_dir):
 
 
 @query(
-    "simhash_signatures", prio=10,
+    "simhash_signatures",
     oracle=f"""
         WITH t AS (SELECT doc_id, {S.simhash32(S.toks("text"))} AS sig FROM documents),
              r AS (SELECT sig AS ref_sig FROM t WHERE doc_id = 0)
@@ -198,7 +198,7 @@ def simhash_signatures(spark, sf_dir):
 
 
 @query(
-    "quality_filter_curation", prio=20,
+    "quality_filter_curation",
     # the curation step itself: score → threshold filter → per-language
     # kept-corpus stats (what a 100 TB training-data pipeline reports
     # after the garbage filter). quality formula = textstats_quality's;
@@ -234,7 +234,7 @@ def quality_filter_curation(spark, sf_dir):
 
 
 @query(
-    "gopher_quality_flags", prio=8,
+    "gopher_quality_flags",
     # Gopher/MassiveText repetition + composition filters (published
     # rules: token bounds, mean word length 3-10, >=80% alphabetic
     # tokens, top-bigram mass <=20%, duplicate-line fraction <=30%).
@@ -305,7 +305,7 @@ def gopher_quality_flags(spark, sf_dir):
 
 
 @query(
-    "pii_scrub", prio=8,
+    "pii_scrub",
     # PII masking (standard pre-training hygiene). The driver corpus
     # has no PII, so deterministic identifiers are injected per doc_id
     # residue (email / phone / IPv4 / clean), then masked with typed
@@ -483,7 +483,7 @@ _POS_BASE = 1 << 30  # packs (hash, rightmost-pos) into ONE bigint;
 
 
 @query(
-    "winnow_fingerprints", prio=20,
+    "winnow_fingerprints",
     # Winnowing (Schleimer, Wilkerson, Aiken, SIGMOD 2003): from the
     # positional k-gram hash stream, select the minimum of every
     # w-window, rightmost on ties — guarantees any shared substring of
@@ -577,7 +577,7 @@ _WINNOW_SHARED_MIN = 3
 
 
 @query(
-    "winnow_dup_pairs", prio=20,
+    "winnow_dup_pairs",
     # Fingerprint-based near-dup candidate pairs (the MOSS use of
     # winnowing): docs sharing >= 3 distinct winnowed k-gram
     # fingerprints, counted exactly. Spark side buckets BY FINGERPRINT
@@ -646,7 +646,7 @@ _CDC_D = 64   # boundary divisor -> expected chunk ~64 tokens
 
 
 @query(
-    "content_defined_chunks", prio=20,
+    "content_defined_chunks",
     # Content-defined chunking (LBFS, Muthitacharoen et al. SOSP 2001;
     # the rsync family): a chunk boundary falls AFTER token p whenever
     # the k-token window hash ending at p is ≡ 0 mod D — boundaries
@@ -718,7 +718,7 @@ def content_defined_chunks(spark, sf_dir):
 
 
 @query(
-    "pmi_collocations", prio=7,
+    "pmi_collocations",
     # Top bigram collocations by a PMI-monotone integer score:
     # rank(PMI) = rank(c_xy / (c_x * c_y)) for fixed corpus totals, so
     # score = (c_xy * 1e9) div (c_x * c_y) ranks identically to PMI
@@ -785,7 +785,7 @@ def pmi_collocations(spark, sf_dir):
 
 
 @query(
-    "tfidf_top_terms", prio=7,
+    "tfidf_top_terms",
     # Per-doc top-3 keywords by an exactly-integer tf-idf: idf_scaled =
     # (N * 1e6) div df ranks identically to log(N/df) (div is monotone
     # decreasing in df for fixed N), score = tf * idf_scaled. Ties by
@@ -853,7 +853,7 @@ def tfidf_top_terms(spark, sf_dir):
 
 
 @query(
-    "ngram_diversity_stats", prio=7,
+    "ngram_diversity_stats",
     # Corpus-diversity audit (the Self-BLEU-family signal memorization
     # studies use): per-doc type-token ratio and distinct-trigram
     # ratio, both as integer ppm — a doc full of repeated phrases
@@ -910,7 +910,7 @@ def ngram_diversity_stats(spark, sf_dir):
 
 
 @query(
-    "c4_line_filters", prio=55,
+    "c4_line_filters",
     # C4-style line/document hygiene (Raffel et al. 2020 §2.2): keep
     # only lines that end in terminal punctuation, have >= 3 words and
     # carry no policy boilerplate; drop whole docs containing '{' or
@@ -997,7 +997,7 @@ def c4_line_filters(spark, sf_dir):
 
 
 @query(
-    "repetition_ngram_fractions", prio=55,
+    "repetition_ngram_fractions",
     # Gopher repetition signals (Rae et al. 2021, Table A1): characters
     # covered by the single most-frequent 3-gram, and characters covered
     # by all duplicated 5-grams (count>=2, counted per occurrence).

@@ -128,7 +128,7 @@ def test_registry_priority_ordering():
     )
 
     names = list(_QUERIES)
-    assert names[0] == "token_count_bpe"  # prio 5: absorbs session warmup
+    assert names[0] == "token_count_bpe"  # absorbs session warmup
     a = 1 + len(_R5_NEVER)
     b = a + len(_R5_CHANGED)
     c = b + len(_R5_STALE_R1)

@@ -5,8 +5,9 @@ fixture corpus can't."""
 from __future__ import annotations
 
 import re
+import signal
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from docling_api_spark.kernels.dispatch import extract_raw_span
@@ -101,26 +102,43 @@ _coord = st.integers(min_value=0, max_value=500)
 _block = st.tuples(_coord, _coord, _coord, _coord)
 
 
+def _bounded(fn, *args, seconds: int = 2):
+    """Call ``fn`` under a SIGALRM deadline, so a kernel that never
+    returns fails its test instead of hanging the suite."""
+
+    def _expire(*_):
+        raise TimeoutError(f"{fn.__name__} did not return within {seconds}s")
+
+    prev = signal.signal(signal.SIGALRM, _expire)
+    signal.alarm(seconds)
+    try:
+        return fn(*args)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, prev)
+
+
 @settings(max_examples=60, deadline=None)
 @given(st.lists(_block, min_size=1, max_size=25))
+# an inverted box (x0 > x1) whose mid-point lands on the near side of
+# the x-gap it opens, so the cut leaves one side of the split empty
+@example([(10, 10, 90, 16), (120, 41, 80, 43)])
 def test_pdf_xy_cut_never_loses_a_block(boxes):
-    """ANY finite geometry — overlapping, degenerate, duplicated —
-    partitions every block into exactly one xy-cut half: the output is
-    a permutation of the input payloads (no silent loss, the defect
-    class NaN coords used to trigger), deterministically."""
+    """ANY finite geometry — overlapping, degenerate, duplicated,
+    inverted — partitions every block into exactly one xy-cut half: the
+    output is a permutation of the input payloads (no silent loss, the
+    defect class NaN coords used to trigger), deterministically, in
+    bounded time."""
     from docling_api_spark.kernels.pdf import extract_pdf_page
 
-    lines = []
-    for i, (a, b, c, d) in enumerate(boxes):
-        x0, x1 = sorted((a, c))
-        y0, y1 = sorted((b, d))
-        lines.append(f"BLOCK {x0},{y0},{x1},{y1},para|payload {i}")
-    page = "\n".join(lines)
-    spans = extract_pdf_page(page)
+    page = "\n".join(
+        f"BLOCK {x0},{y0},{x1},{y1},para|payload {i}" for i, (x0, y0, x1, y1) in enumerate(boxes)
+    )
+    spans = _bounded(extract_pdf_page, page)
     assert sorted(s["text"] for s in spans) == sorted(
         f"payload {i}" for i in range(len(boxes))
     )
-    assert extract_pdf_page(page) == spans
+    assert _bounded(extract_pdf_page, page) == spans
 
 
 @settings(max_examples=40, deadline=None)
@@ -182,21 +200,43 @@ cell_text = st.text(
 grid = st.lists(st.lists(cell_text, min_size=1, max_size=4), min_size=1, max_size=4)
 
 
-@settings(max_examples=50, deadline=None)
-@given(grid)
-def test_xlsx_grid_roundtrip(rows):
-    """Any grid of simple cells survives the XLSX kernel: one heading +
-    one table whose text reproduces the (padded) grid."""
-    from docling_api_spark.kernels.xlsx import extract_xlsx_sheet
+def _grid_markup(fmt: str, rows: list[list[str]]) -> str:
+    """One table holding ``rows`` in each kernel's source markup."""
+    from docling_api_spark.kernels.pdf import CELL_SEP, ROW_SEP
 
-    xml = "<sheet name=\"S\">" + "".join(
-        "<row>" + "".join(f"<c>{c}</c>" for c in row) + "</row>" for row in rows
-    ) + "</sheet>"
-    spans = extract_xlsx_sheet(xml)
-    assert spans[0] == {"kind": "heading", "text": "S", "media_ref": ""}
+    def wrap(row_open, row_close, cell_open, cell_close):
+        return "".join(
+            row_open + "".join(cell_open + c + cell_close for c in row) + row_close for row in rows
+        )
+
+    if fmt == "docx_xml":
+        return "<w:tbl>" + wrap("<w:tr>", "</w:tr>", "<w:tc><w:p><w:r><w:t>", "</w:t></w:r></w:p></w:tc>") + "</w:tbl>"
+    if fmt == "pptx_slide":
+        return "<p:graphicFrame><a:tbl>" + wrap("<a:tr>", "</a:tr>", "<a:tc><a:p><a:t>", "</a:t></a:p></a:tc>") + "</a:tbl></p:graphicFrame>"
+    if fmt == "xlsx_sheet":
+        return '<sheet name="S">' + wrap("<row>", "</row>", "<c>", "</c>") + "</sheet>"
+    if fmt == "html":
+        return "<table>" + wrap("<tr>", "</tr>", "<td>", "</td>") + "</table>"
+    payload = ROW_SEP.join(CELL_SEP.join(row) for row in rows)
+    return f"BLOCK 10,10,90,16,table|{payload}"
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.sampled_from(["docx_xml", "pptx_slide", "xlsx_sheet", "html", "pdf_page"]), grid)
+def test_table_grid_roundtrip_every_format(fmt, rows):
+    """Every table writer emits one format: any ragged grid of simple
+    cells comes back as exactly one table span whose text is the grid
+    padded to its widest row, cells joined by " | ", rows by newline
+    (the format operators.extract.tables_table parses)."""
+    spans = extract_raw_span(fmt, _grid_markup(fmt, rows))
+    if fmt == "xlsx_sheet":
+        assert spans[0] == {"kind": "heading", "text": "S", "media_ref": ""}
+        spans = spans[1:]
     ncols = max(len(r) for r in rows)
     padded = [r + [""] * (ncols - len(r)) for r in rows]
-    assert spans[1]["text"] == "\n".join(" | ".join(r) for r in padded)
+    assert spans == [
+        {"kind": "table", "text": "\n".join(" | ".join(r) for r in padded), "media_ref": ""}
+    ]
 
 
 @settings(max_examples=50, deadline=None)
