@@ -241,7 +241,6 @@ def _sf_of(sf_dir: str) -> float:
 
 
 def run_suite(sf_dir: str, cpus: str) -> dict:
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
     from docling_api_spark.plans import registry
     from docling_api_spark.session import get_spark
     from docling_api_spark.sources.catalog import load

@@ -82,6 +82,11 @@ def _parse_blocks(page_text: str) -> list[tuple]:
             math.isfinite(x0) and math.isfinite(y0) and math.isfinite(x1) and math.isfinite(y1)
         ):
             raise ValueError(f"non-finite block geometry: {head.strip()!r}")
+        # Inverted corners (x0 > x1 or y0 > y1) name the same rectangle:
+        # swap them, so the xy-cut projects intervals with lo <= hi and
+        # a figure's bbox provenance always reads min-corner first.
+        x0, x1 = min(x0, x1), max(x0, x1)
+        y0, y1 = min(y0, y1), max(y0, y1)
         blocks.append((x0, y0, x1, y1, coords_role[4].strip(), payload))
     return blocks
 

@@ -14,7 +14,7 @@ piece stays individually oracle-gated.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from docling_api_spark.functions.hashing import tokens
@@ -148,30 +148,62 @@ def curate_corpus(
 
 
 class CurationAuditError(RuntimeError):
-    """Raised when the cascade's audit table violates row conservation."""
+    """Raised when the cascade's input or audit table breaks an invariant."""
 
 
-def assert_row_conservation(docs: DataFrame, staged: DataFrame, id_col: str = "doc_id") -> int:
+# the drop stages curate_corpus labels, plus the kept docs
+STAGES = ("decontamination", "dedup", "kept", "quality")
+
+
+def count_input_docs(docs: DataFrame, id_col: str = "doc_id") -> int:
+    """Input row count, from one aggregate that also counts distinct
+    non-null ids. Every stage joins back on the id, so docs sharing one
+    would come out as copies of a single row (the line-dedup stage
+    regroups by id and joins their texts), and a doc with a null id
+    would be labelled a dedup drop; raises CurationAuditError instead,
+    before the cascade runs."""
+    n_in, n_ids = docs.agg(F.count(F.lit(1)), F.count_distinct(id_col)).first()
+    if n_ids != n_in:
+        raise CurationAuditError(
+            f"{n_in} input docs but {n_ids} distinct non-null {id_col} values"
+        )
+    return n_in
+
+
+def observe_curation(staged: DataFrame) -> tuple[DataFrame, Observation]:
+    """``staged`` with its row count and the docs per stage attached as
+    an ``Observation``; the first action on the returned frame (the
+    job's write) fills it."""
+    obs = Observation("curation")
+    stage = F.coalesce("drop_stage", F.lit("kept"))
+    observed = staged.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        *(F.count_if(stage == s).alias(s) for s in STAGES),
+    )
+    return observed, obs
+
+
+def curation_stats(observation: Observation) -> dict:
+    """The run's summary, read from the observation its write filled:
+    ``rows`` (audit rows written) and ``stages``, the docs per stage
+    for the stages that hold any."""
+    m = observation.get
+    return {
+        "rows": int(m["rows"]),
+        "stages": {s: int(m[s]) for s in STAGES if m[s]},
+    }
+
+
+def assert_row_conservation(n_in: int, n_out: int) -> int:
     """The cascade's core invariant: one audit row per INPUT document —
     a dropped doc is a LABELED row, never a missing one (the silent
     row-loss class: an operator whose explode produces no rows for a
     degenerate doc removes it from every downstream join). Returns the
     row count; raises CurationAuditError on violation so the job can
-    refuse to publish. Both counts are metadata-cheap when ``staged``
-    is persisted."""
-    n_in = docs.select(id_col).count()
-    n_out = staged.count()
+    refuse to publish."""
     if n_out != n_in:
         raise CurationAuditError(
             f"row conservation violated: {n_in} input docs but {n_out} audit rows"
         )
     return n_out
-
-
-def curation_stats(staged: DataFrame) -> DataFrame:
-    """Per-stage drop counts + kept count (the run's summary report)."""
-    return (
-        staged.groupBy(F.coalesce("drop_stage", F.lit("kept")).alias("stage"))
-        .agg(F.count("*").alias("docs"))
-        .orderBy("stage")
-    )

@@ -18,9 +18,15 @@ with per-batch commit manifests (lineage + metrics) under
 ``<output>/_commits/`` — rerunning with --resume (or just rerunning:
 resume is the default behavior) skips committed buckets.
 
-On a cluster, leave ``--master`` to spark-submit; locally the script
-falls back to local[*]. Shuffle partitions should be set per cluster
-via --conf spark.sql.shuffle.partitions=<2-3× total cores>.
+The session comes from ``session.get_spark``, so the job runs with the
+engine's settings, and any key given to spark-submit wins over them.
+On a cluster, leave ``--master`` to spark-submit; locally the launcher
+falls back to local[*]. Set shuffle partitions per cluster with
+``--conf spark.sql.shuffle.partitions=<2-3× total cores>``.
+
+The report is one JSON line: batches, skipped buckets, the totals summed
+from the commit manifests, the audit, and the run's conditions (master,
+default parallelism, shuffle partitions).
 """
 
 from __future__ import annotations
@@ -38,7 +44,6 @@ try:  # noqa: SIM105
 except ModuleNotFoundError:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 
 
 def main() -> None:
@@ -72,17 +77,11 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("docling_api_spark.extract")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-
-    from docling_api_spark.checkpoint import commit_history, extract_with_checkpoint
-
+    from docling_api_spark.checkpoint import CommitLog, extract_with_checkpoint
     from docling_api_spark.kernels.ocr import OcrOptions
+    from docling_api_spark.session import get_spark, run_conditions
+
+    spark = get_spark(app_name="docling_api_spark.extract")
 
     corpus = spark.read.parquet(args.input)
     result = extract_with_checkpoint(
@@ -114,17 +113,21 @@ def main() -> None:
                      "note": "empty output, no data files"}
         else:
             audit = assert_extraction_invariants(materialized)
-    hist = commit_history(spark, args.output)
-    totals = hist.groupBy().sum("docs", "spans", "chars").first()
+    # totals over every committed batch, this run's and earlier runs';
+    # null when nothing was ever committed
+    commits = CommitLog(args.output, spark).commits()
+    totals = {
+        k: sum(c["metrics"][k] for c in commits) if commits else None
+        for k in ("docs", "spans", "chars")
+    }
     print(
         json.dumps(
             {
                 "processed_batches": result["processed_batches"],
                 "skipped_buckets": len(result["skipped_buckets"]),
-                "docs": totals[0],
-                "spans": totals[1],
-                "chars": totals[2],
+                **totals,
                 "audit": audit,
+                "run": run_conditions(spark),
             }
         )
     )

@@ -4,7 +4,24 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from docling_api_spark.operators.curate import curate_corpus, curation_stats
+import pytest
+
+from docling_api_spark.operators.curate import (
+    CurationAuditError,
+    assert_row_conservation,
+    count_input_docs,
+    curate_corpus,
+    curation_stats,
+    observe_curation,
+)
+
+
+def _curate_observed(docs, **kw):
+    """curate_corpus's rows by id and its summary, observed on the one
+    action over them, as the curate job observes its write."""
+    staged, observation = observe_curation(curate_corpus(docs, **kw))
+    rows = {r.id: r for r in staged.collect()}
+    return rows, curation_stats(observation)
 
 
 def test_empty_and_all_boilerplate_docs_drop_at_quality(spark):
@@ -23,16 +40,15 @@ def test_empty_and_all_boilerplate_docs_drop_at_quality(spark):
         "doc_id long, text string",
     )
     # cap=1: the boiler line survives dedup in docs 2 and 4 → df=2 > 1
-    staged = curate_corpus(docs, quality_threshold=0.3, line_df_cap=1)
-    rows = {r.id: r for r in staged.collect()}
+    rows, stats = _curate_observed(docs, quality_threshold=0.3, line_df_cap=1)
     assert rows[1].drop_stage == "quality" and not rows[1].kept
     assert rows[3].drop_stage == "dedup"
     assert rows[2].drop_stage == "quality" and not rows[2].kept
     assert rows[2].quality is None  # zero tokens after cleanup
     assert rows[4].kept and rows[4].n_removed == 1
     assert rows[5].kept
-    stats = {r.stage: r.docs for r in curation_stats(staged).collect()}
-    assert stats["quality"] == 2 and stats["kept"] == 2 and stats["dedup"] == 1
+    assert stats["rows"] == 5
+    assert stats["stages"] == {"dedup": 1, "kept": 2, "quality": 2}
 
 
 def test_decontamination_runs_only_on_quality_survivors(spark):
@@ -165,30 +181,100 @@ def test_null_text_docs_are_audited_not_lost(spark):
         ],
         "doc_id long, text string",
     )
-    staged = curate_corpus(docs, quality_threshold=0.3)
-    rows = {r.id: r for r in staged.collect()}
-    assert len(rows) == 3  # one audit row per INPUT doc, none lost
+    rows, stats = _curate_observed(docs, quality_threshold=0.3)
+    assert len(rows) == 3 == stats["rows"]  # one audit row per INPUT doc, none lost
     assert rows[1].kept
     # min-id NULL doc survives dedup, then drops at quality (not dedup)
     assert rows[2].drop_stage == "quality" and rows[2].quality is None
     assert rows[3].drop_stage == "dedup"
-    stats = {r.stage: r.docs for r in curation_stats(staged).collect()}
-    assert stats == {"kept": 1, "quality": 1, "dedup": 1}
+    assert stats["stages"] == {"kept": 1, "quality": 1, "dedup": 1}
 
 
 def test_row_conservation_guard(spark):
-    """run_curate refuses to publish an audit table that lost rows."""
-    import pytest as _pytest
-
-    from docling_api_spark.operators.curate import (
-        CurationAuditError,
-        assert_row_conservation,
-    )
-
+    """run_curate refuses to publish an audit table that lost rows: the
+    rows out come from the observation on the one action."""
     docs = spark.createDataFrame(
         [(1, "alpha"), (2, "beta"), (3, "gamma")], "doc_id long, text string"
     )
-    staged = curate_corpus(docs)
-    assert assert_row_conservation(docs, staged) == 3
-    with _pytest.raises(CurationAuditError, match="3 input docs but 2"):
-        assert_row_conservation(docs, staged.filter("id <> 2"))
+    n_in = count_input_docs(docs)
+    _, stats = _curate_observed(docs)
+    assert assert_row_conservation(n_in, stats["rows"]) == 3
+    lossy, observation = observe_curation(curate_corpus(docs).filter("id <> 2"))
+    lossy.collect()
+    with pytest.raises(CurationAuditError, match="3 input docs but 2"):
+        assert_row_conservation(n_in, curation_stats(observation)["rows"])
+
+
+def test_duplicate_or_null_doc_ids_rejected(spark):
+    """Two input docs sharing doc_id=1 would come out of the cascade as
+    two identical rows, each carrying both texts, and row conservation
+    would still hold (3 in, 3 out): the input count refuses them."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (1, "delta epsilon"), (2, "zeta eta")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(CurationAuditError, match="3 input docs but 2 distinct"):
+        count_input_docs(docs)
+    assert count_input_docs(docs.filter("text <> 'delta epsilon'")) == 2
+    # a null id cannot join back either: it would read as a dedup drop
+    nulls = spark.createDataFrame([(1, "a"), (None, "b")], "doc_id long, text string")
+    with pytest.raises(CurationAuditError, match="2 input docs but 1 distinct"):
+        count_input_docs(nulls)
+
+
+def _curate_job():
+    """jobs/run_curate.py as a module, to run its job in this session."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs", "run_curate.py")
+    spec = importlib.util.spec_from_file_location("run_curate", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    return job
+
+
+def _tree(path):
+    import os
+
+    return {
+        os.path.relpath(os.path.join(d, f), path): open(os.path.join(d, f), "rb").read()
+        for d, _, files in os.walk(path)
+        for f in files
+    }
+
+
+def test_curate_job_publishes_only_conserved_tables(spark, tmp_path, monkeypatch):
+    """The job publishes through a staging directory: a run that loses a
+    row, or whose input repeats a doc_id, raises and leaves an existing
+    --output byte-for-byte as it was, with no staging directory left."""
+    import os
+
+    from docling_api_spark.operators import curate
+
+    job = _curate_job()
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "the of and " * 40), (2, "alpha"), (3, "beta")], "doc_id long, text string"
+    ).write.parquet(docs)
+    out = str(tmp_path / "curated")
+    argv = ["--input", docs, "--output", out]
+    report = job.run(spark, argv)
+    assert report["stages"] == {"kept": 1, "quality": 2}
+    assert report["run"] == {"master": "local[4]", "default_parallelism": 4, "shuffle_partitions": 8}
+    assert spark.read.parquet(out).count() == 3
+    published = _tree(out)
+
+    real = curate.curate_corpus
+    monkeypatch.setattr(curate, "curate_corpus", lambda *a, **kw: real(*a, **kw).filter("id <> 2"))
+    with pytest.raises(CurationAuditError, match="3 input docs but 2 audit rows"):
+        job.run(spark, argv)
+    monkeypatch.undo()
+    assert _tree(out) == published
+
+    dup = str(tmp_path / "dup")
+    spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], "doc_id long, text string").write.parquet(dup)
+    with pytest.raises(CurationAuditError, match="distinct"):
+        job.run(spark, ["--input", dup, "--output", out])
+    assert _tree(out) == published
+    assert sorted(os.listdir(tmp_path)) == ["curated", "docs", "dup"]

@@ -141,6 +141,19 @@ def test_pdf_xy_cut_never_loses_a_block(boxes):
     assert _bounded(extract_pdf_page, page) == spans
 
 
+def test_pdf_inverted_box_is_normalized():
+    """Inverted corners are swapped: a figure's bbox reads min-corner
+    first, and a page orders exactly as with the corners given the
+    right way round."""
+    from docling_api_spark.kernels.pdf import extract_pdf_page
+
+    (fig,) = extract_pdf_page("BLOCK 120,41,80,43,figure|r1")
+    assert fig["bbox"] == "80,41,120,43"
+    inverted = "BLOCK 10,16,90,10,para|a\nBLOCK 120,43,80,41,para|b\nBLOCK 5,60,0,50,para|c"
+    upright = "BLOCK 10,10,90,16,para|a\nBLOCK 80,41,120,43,para|b\nBLOCK 0,50,5,60,para|c"
+    assert extract_pdf_page(inverted) == extract_pdf_page(upright)
+
+
 @settings(max_examples=40, deadline=None)
 @given(words.filter(lambda ws: len(ws) >= 6), st.integers(min_value=4, max_value=64))
 def test_chunker_section_title_tracks_last_heading(ws, budget):

@@ -1,6 +1,12 @@
 """End-to-end spark-submit packaging test: build the --py-files zip,
 run the extraction job entry point against a corpus dir in a clean
-subprocess whose only import path to the engine is the zip."""
+subprocess whose only import path to the engine is the zip.
+
+Each child gets its launcher keys through ``PYSPARK_SUBMIT_ARGS``, as
+``spark-submit --conf`` would pass them: an uncompressed event log, from
+which the tests count the job's SQL executions (one per Spark action),
+and for the extraction job a shuffle-partition count, which must win
+over ``get_spark``'s default."""
 
 from __future__ import annotations
 
@@ -9,10 +15,41 @@ import os
 import subprocess
 import sys
 
+from docling_api_spark.session import _default_shuffle_partitions
 from docling_api_spark.sources.catalog import load, wrap_documents_as_corpus
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _child_env(zip_path: str, event_log: str, *confs: str) -> dict:
+    """The child's environment: the engine only from the zip, and the
+    given launcher keys plus an uncompressed event log under
+    ``event_log``."""
+    os.makedirs(event_log)
+    confs = (
+        "spark.eventLog.enabled=true",
+        f"spark.eventLog.dir={event_log}",
+        "spark.eventLog.compress=false",
+        *confs,
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = zip_path
+    env["PYSPARK_SUBMIT_ARGS"] = " ".join(f"--conf {c}" for c in confs) + " pyspark-shell"
+    return env
+
+
+def _sql_executions(event_log: str) -> int:
+    """SQL executions recorded in the event log(s) under ``event_log``
+    (Spark writes rolling logs as a directory of ``events_*`` files)."""
+    start = '"Event":"org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"'
+    n = 0
+    for d, _, files in os.walk(event_log):
+        for f in files:
+            if f.startswith(("events_", "local-")):
+                with open(os.path.join(d, f)) as fh:
+                    n += sum(start in line for line in fh)
+    return n
 
 
 def test_package_builds():
@@ -47,9 +84,9 @@ def test_submit_job_runs_from_zip(spark, tmp_path):
         sys.path.pop(0)
 
     out_path = str(tmp_path / "extracted")
-    env = dict(os.environ)
     # the child must resolve the package from the zip, not the repo
-    env["PYTHONPATH"] = zip_path
+    event_log = str(tmp_path / "eventlog")
+    env = _child_env(zip_path, event_log, "spark.sql.shuffle.partitions=7")
     proc = subprocess.run(
         [
             sys.executable,
@@ -74,6 +111,11 @@ def test_submit_job_runs_from_zip(spark, tmp_path):
     assert report["docs"] == 60
     assert report["processed_batches"] == 2
     assert os.path.isdir(os.path.join(out_path, "_commits"))
+    # the launcher's key wins over get_spark's default
+    assert report["run"]["shuffle_partitions"] == 7
+    # one write per batch, one audit scan; the totals come from the
+    # manifests without a Spark job
+    assert _sql_executions(event_log) == report["processed_batches"] + 1
 
 
 def test_curate_job_runs_from_zip(spark, tmp_path):
@@ -95,8 +137,8 @@ def test_curate_job_runs_from_zip(spark, tmp_path):
         sys.path.pop(0)
 
     out_path = str(tmp_path / "curated")
-    env = dict(os.environ)
-    env["PYTHONPATH"] = zip_path
+    event_log = str(tmp_path / "eventlog")
+    env = _child_env(zip_path, event_log)
     proc = subprocess.run(
         [
             sys.executable,
@@ -122,3 +164,10 @@ def test_curate_job_runs_from_zip(spark, tmp_path):
     got = spark.read.parquet(out_path)
     assert got.count() == 500
     assert got.filter("kept = 'true'").count() == stages["kept"]
+    # no launcher key for it: get_spark's default for the launcher's master
+    run = report["run"]
+    assert run["master"] == "local[*]"
+    assert run["shuffle_partitions"] == _default_shuffle_partitions("local[*]")
+    # the input scan and the write, nothing else
+    assert _sql_executions(event_log) == 2
+    assert sorted(os.listdir(tmp_path)) == ["curated", "docling_api_spark.zip", "docs", "eval", "eventlog"]
